@@ -2,8 +2,10 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.Dedup.dedupKeepFirst
+import graft.sources.Sources
 
 /** The reference pipeline's semantics (mahdi-hosseini/dend_spark_data_lake,
   * /root/reference/etl_pipeline.py), re-expressed Spark-first in Scala:
@@ -24,6 +26,38 @@ import graft.operators.Dedup.dedupKeepFirst
   *     etl_pipeline.py:276 vs :171–178, SURVEY.md §3.3).
   */
 object SparkifyEtl {
+
+  /** Song-file fields the pipeline reads (FIXTURES.md §1), typed as JSON
+    * inference types them. Other fields in the files are skipped at
+    * parse time. */
+  val SongSchema: StructType = StructType(Seq(
+    StructField("artist_id", StringType),
+    StructField("artist_latitude", DoubleType),
+    StructField("artist_location", StringType),
+    StructField("artist_longitude", DoubleType),
+    StructField("artist_name", StringType),
+    StructField("duration", DoubleType),
+    StructField("song_id", StringType),
+    StructField("title", StringType),
+    StructField("year", LongType)))
+
+  /** Activity-log fields the pipeline reads (FIXTURES.md §2), typed as
+    * JSON inference types them and in source casing. `userId` stays a
+    * string so `cleanLogData`'s `try_cast` keeps null-on-bad-input. */
+  val LogSchema: StructType = StructType(Seq(
+    StructField("artist", StringType),
+    StructField("firstName", StringType),
+    StructField("gender", StringType),
+    StructField("lastName", StringType),
+    StructField("length", DoubleType),
+    StructField("level", StringType),
+    StructField("location", StringType),
+    StructField("page", StringType),
+    StructField("sessionId", LongType),
+    StructField("song", StringType),
+    StructField("ts", LongType),
+    StructField("userAgent", StringType),
+    StructField("userId", StringType)))
 
   /** Clean activity-log rows: dropna on the 12 pipeline columns
     * (etl_pipeline.py:198–214), the reference's OR-chain non-empty filter
@@ -128,13 +162,22 @@ object SparkifyEtl {
     * reference's partitioning (songs by year/artist_id, time and songplays
     * by year/month — etl_pipeline.py:113–115, :245–247, :287–289).
     *
+    * Both inputs are read against `SongSchema` / `LogSchema` in
+    * PERMISSIVE mode, so no schema-inference pass runs (the reference
+    * infers, etl_pipeline.py:110, :238 — at scale a second full read of
+    * the input). Unread fields are skipped at parse time. A malformed
+    * line becomes an all-null row, as under inference, and the log's
+    * dropna removes it. A required field missing from every file reads
+    * as NULL; under inference it failed analysis with an
+    * `AnalysisException`.
+    *
     * `writeMode` defaults to `errorifexists` — the reference sets no
     * `.mode(...)` anywhere (etl_pipeline.py:113–115), so a re-run over an
     * existing output directory fails rather than clobbering it. Harness
     * and idempotent-job callers pass `"overwrite"` explicitly. */
   def run(spark: SparkSession, songJsonPath: String, logJsonPath: String,
           outDir: String, writeMode: String = "errorifexists"): Unit = {
-    val songData = spark.read.json(songJsonPath).cache()
+    val songData = Sources.readJson(spark, songJsonPath, SongSchema).cache()
     val songs = songsTable(songData)
     val artists = artistsTable(songData)
     songs.write.mode(writeMode)
@@ -142,7 +185,8 @@ object SparkifyEtl {
     artists.write.mode(writeMode).parquet(s"$outDir/artists")
     songData.unpersist()
 
-    val cleanLog = cleanLogData(spark.read.json(logJsonPath)).cache()
+    val cleanLog =
+      cleanLogData(Sources.readJson(spark, logJsonPath, LogSchema)).cache()
     usersTable(cleanLog).write.mode(writeMode).parquet(s"$outDir/users")
     timeTable(cleanLog).write.mode(writeMode)
       .partitionBy("year", "month").parquet(s"$outDir/time")

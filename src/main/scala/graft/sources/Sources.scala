@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.StructType
   *
   * The reference scans JSON with schema inference (etl_pipeline.py:110,
   * :238) — correct for exploration, wrong at 100 TB where the inference
-  * pass is a full extra read. The production readers here take an
-  * explicit `StructType`; the inferred variants exist for
-  * reference-faithful behavior.
+  * pass is a full extra read. The JSON and CSV readers here take an
+  * explicit `StructType` and never infer; `SourceReadLintSpec` keeps
+  * every JSON read in the library routed through `readJson`.
   */
 object Sources {
 
@@ -22,11 +22,6 @@ object Sources {
   def readJson(spark: SparkSession, path: String, schema: StructType,
                mode: String = "PERMISSIVE"): DataFrame =
     spark.read.schema(schema).option("mode", mode).json(path)
-
-  /** Schema-inferred JSON scan — the reference's S1/S2 behavior
-    * (etl_pipeline.py:110, :238): one inference pass, then the scan. */
-  def readJsonInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
 
   /** CSV scan with explicit schema; `header=true` skips the first line
     * (names come from the schema, not the file). */

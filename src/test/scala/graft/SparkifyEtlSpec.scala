@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 
 import graft.etl.SparkifyEtl
+import graft.sources.Sources
 
 /** End-to-end ETL semantics against miniature JSON fixtures shaped like the
   * reference's Sparkify inputs (FIXTURES.md §1–2). Pins the behaviors the
@@ -56,6 +58,32 @@ class SparkifyEtlSpec extends SparkTestBase {
     p
   }
 
+  // Parity fixtures: source-shaped rows that also carry the fields the
+  // pipeline never reads (num_songs; auth, itemInSession, method,
+  // registration, status), plus one malformed (truncated) line per input.
+  private lazy val paritySongJson = {
+    val rows = Seq(
+      """{"num_songs":1,"artist_id":"A1","artist_latitude":34.0,"artist_location":"LA","artist_longitude":-118.0,"artist_name":"ArtA","duration":100.5,"song_id":"S1","title":"Alpha","year":0}""",
+      """{"num_songs":1,"artist_id":"A2","artist_latitude":null,"artist_location":"","artist_longitude":null,"artist_name":"ArtB","duration":200.25,"song_id":"S2","title":"Beta","year":2001}""",
+      """{"num_songs":1,"artist_id":"A3","artist_latitude":40.7,"artist_location":"NY","artist_longitude":-74.0,"artist_name":"ArtC","duration":300.0,"song_id":"S3","title":"Gamma","year":2002}""",
+      """{"num_songs":1,"artist_id":"A9","artist_name":"Bro""")
+    val p = s"$dir/parity_song.json"
+    Files.writeString(java.nio.file.Paths.get(p), rows.mkString("\n"))
+    p
+  }
+
+  private lazy val parityLogJson = {
+    val rows = Seq(
+      """{"artist":"ArtB","auth":"Logged In","firstName":"Ann","gender":"F","itemInSession":0,"lastName":"Lee","length":200.25,"level":"free","location":"Austin","method":"PUT","page":"NextSong","registration":1.540000001E12,"sessionId":11,"song":"Beta","status":200,"ts":1541000000000,"userAgent":"UA1","userId":"1"}""",
+      """{"artist":"ArtA","auth":"Logged In","firstName":"Ann","gender":"F","itemInSession":1,"lastName":"Lee","length":100.5,"level":"paid","location":"Austin","method":"PUT","page":"NextSong","registration":1.540000001E12,"sessionId":12,"song":"Alpha","status":200,"ts":1541100000000,"userAgent":"UA1","userId":"1"}""",
+      """{"artist":null,"auth":"Logged Out","firstName":null,"gender":null,"itemInSession":2,"lastName":null,"length":null,"level":"free","location":null,"method":"GET","page":"Home","registration":null,"sessionId":13,"song":null,"status":307,"ts":1541200000000,"userAgent":null,"userId":""}""",
+      """{"artist":"ArtB","auth":"Logged In","firstName":"Bob","gender":"M","itemInSession":0,"lastName":"Kim","length":123.0,"level":"free","location":null,"method":"PUT","page":"NextSong","registration":1.540000002E12,"sessionId":21,"song":"Beta","status":200,"ts":1541300000000,"userAgent":"UA2","userId":"x2"}""",
+      """{"artist":"ArtC","firstName":"Cal","lastName":""")
+    val p = s"$dir/parity_log.json"
+    Files.writeString(java.nio.file.Paths.get(p), rows.mkString("\n"))
+    p
+  }
+
   private lazy val out = { SparkifyEtl.run(spark, songJson, logJson, s"$dir/out"); s"$dir/out" }
 
   test("run refuses to clobber an existing output by default, like the reference") {
@@ -69,6 +97,41 @@ class SparkifyEtlSpec extends SparkTestBase {
       writeMode = "overwrite")
     assert(spark.read.parquet(s"$existing/songs").count() === 4,
       "explicit overwrite re-runs cleanly")
+  }
+
+  test("declared schemas give the inferred types and identical rows in " +
+       "all five tables, unread fields and malformed lines included") {
+    for ((schema, path) <- Seq(SparkifyEtl.SongSchema -> paritySongJson,
+                               SparkifyEtl.LogSchema -> parityLogJson)) {
+      val inferred = spark.read.json(path).schema
+      assert(inferred.fieldNames.contains("_corrupt_record"),
+        s"$path must hold a malformed line")
+      for (f <- schema.fields)
+        assert(inferred(f.name).dataType === f.dataType,
+          s"${f.name} in $path: declared ${f.dataType}, inferred " +
+          inferred(f.name).dataType)
+    }
+    def tables(song: DataFrame, log: DataFrame) = {
+      val clean = SparkifyEtl.cleanLogData(log)
+      val songs = SparkifyEtl.songsTable(song)
+      val artists = SparkifyEtl.artistsTable(song)
+      Seq("songs" -> songs, "artists" -> artists,
+        "users" -> SparkifyEtl.usersTable(clean),
+        "time" -> SparkifyEtl.timeTable(clean),
+        "songplays" -> SparkifyEtl.songplaysTable(clean, songs, artists))
+    }
+    val declared = tables(
+      Sources.readJson(spark, paritySongJson, SparkifyEtl.SongSchema),
+      Sources.readJson(spark, parityLogJson, SparkifyEtl.LogSchema))
+    val inferred = tables(spark.read.json(paritySongJson),
+      spark.read.json(parityLogJson))
+    for (((name, d), (_, i)) <- declared.zip(inferred)) {
+      assert(d.schema === i.schema, s"$name schema")
+      assert(rendered(d) === rendered(i), s"$name rows")
+    }
+    val songplays = declared.last._2
+    assert(songplays.count() === 2, "both exact (artist, song, length) " +
+      "matches join; the malformed lines join nothing")
   }
 
   test("songs: one row per song_id, year 0 becomes NULL") {
