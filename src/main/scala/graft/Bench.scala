@@ -222,9 +222,7 @@ object Bench {
         // training memo is session-scoped in production but cleared
         // here too, so each q_bpe_* row measures its own training cost
         // (memo hits are allowed only within one query's best-of-N).
-        graft.operators.OpCaches.release(blocking = true)
-        graft.operators.Ngrams.clearBpeCache()
-        graft.operators.Ngrams.clearUnigramCache()
+        graft.operators.OpCaches.resetQueryState()
         val okTimes = attempts.collect { case (t, None) => t }
         if (okTimes.isEmpty)
           // all runs threw: hard failure; times are time-to-exception
@@ -253,9 +251,7 @@ object Bench {
         val extra = (1 to rerunAttempts).map(_ =>
           timeOne(SparkEntry.queries(r.name)))
           .collect { case (t, None) => t }
-        graft.operators.OpCaches.release(blocking = true)
-        graft.operators.Ngrams.clearBpeCache()
-        graft.operators.Ngrams.clearUnigramCache()
+        graft.operators.OpCaches.resetQueryState()
         if (extra.isEmpty) r
         else r.copy(best = math.min(r.best, extra.min), rerun = true)
       }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans of EVERY registered query to
   * PLANS.md — regenerate with `sbt "runMain graft.PlanDump"` after
   * plan-affecting changes or a new query registration (PlanRosterSpec
@@ -11,13 +9,8 @@ import org.apache.spark.sql.SparkSession
   * curated scale annotations; the rest dump with a standard note. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSessionFactory.create(master = "local[8]",
+      shufflePartitions = 8, appName = "graft-plandump")
     val d = "/root/testdata/sf0.001"
 
     val curated = Seq(
@@ -168,6 +161,9 @@ object PlanDump {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       md.append("```\n")
       println(s"[plandump] $name")
+      // ~350 queries build in this one JVM: free each one's persisted
+      // frames and training memos before the next builds
+      graft.operators.OpCaches.resetQueryState()
     }
     Files.writeString(Paths.get("PLANS.md"), md.toString)
     println("[plandump] wrote PLANS.md")

@@ -25,9 +25,7 @@ object PlanSnap {
       Files.writeString(Paths.get(s"plans/r20/${name}_$tag.txt"), txt)
       println(s"[plansnap] plans/r20/${name}_$tag.txt " +
         s"(${txt.linesIterator.length} lines)")
-      graft.operators.OpCaches.release(blocking = true)
-      graft.operators.Ngrams.clearBpeCache()
-      graft.operators.Ngrams.clearUnigramCache()
+      graft.operators.OpCaches.resetQueryState()
     }
     spark.stop()
   }

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.Verify <sfDir> <outDir> [q1,q2,...]")
     // optional 3rd arg: comma-separated query names, for fast single-query
     // iteration against scripts/check_oracle.py (driver passes 2 args)
     val (sfDir, outDir, only) = args match {
@@ -82,10 +84,10 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // the BPE training memo is session-scoped (the q_bpe_* family rides
-    // one trained tokenizer); release it at end of run
-    graft.operators.Ngrams.clearBpeCache()
-    graft.operators.Ngrams.clearUnigramCache()
+    // the BPE and unigram training memos are session-scoped (the
+    // q_bpe_* family rides one trained tokenizer); release them at end
+    // of run
+    graft.operators.OpCaches.resetQueryState()
     spark.stop()
   }
 }

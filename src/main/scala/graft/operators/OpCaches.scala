@@ -109,4 +109,17 @@ object OpCaches {
     }
     frames.clear()
   }
+
+  /** Reset everything one query can leave behind for the next: the
+    * per-query frames ([[release]], blocking) AND the session-scoped
+    * BPE and unigram training memos. Harnesses that time or profile
+    * queries one by one call this between queries — without the memo
+    * clears, a later query (or a later run of the same query) that
+    * trains an already-seen tokenizer config is priced as a memo hit
+    * instead of its training cost. */
+  def resetQueryState(): Unit = {
+    release(blocking = true)
+    Ngrams.clearBpeCache()
+    Ngrams.clearUnigramCache()
+  }
 }

@@ -46,50 +46,16 @@ class CollectLintSpec extends AnyFunSuite {
     // collection cannot hide in the entry points either
     "Bench.scala" -> (2,
       "one-row warm-up aggregates (range-sum / groupBy-count smoke)"),
-    "Smoke.scala" -> (1, "one-row smoke-check aggregate"),
-    "ProbeJobs.scala" -> (1, "one-row warm-up aggregate (range-sum)"),
-    "ProbeApss.scala" -> (1, "one-row warm-up aggregate (range-sum)")
+    "Smoke.scala" -> (1, "one-row smoke-check aggregate")
   )
 
   test("every .collect() call site in the library is registered as " +
        "bounded driver state") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"lint must run from the repo root, cwd=${System.getProperty("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
-    val files =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala")).toList
-      } finally walk.close()
-    assert(files.nonEmpty)
-    val counts = files.map { p =>
-      val rel = root.relativize(p).toString.replace('\\', '/')
-      val src = java.nio.file.Files.readString(p)
-      // count only real call sites; line comments describing collects
-      // (several scaladocs discuss the pattern) must not trip the lint
-      val n = src.linesIterator
-        .filterNot(_.trim.startsWith("//"))
-        .filterNot(_.trim.startsWith("*"))
-        .map(l => l.sliding(".collect()".length).count(_ == ".collect()"))
-        .sum
-      rel -> n
-    }.filter(_._2 > 0).toMap
-    val unregistered = counts.filter { case (f, n) =>
-      registry.get(f).forall(_._1 < n)
-    }
-    assert(unregistered.isEmpty,
-      s"unaudited .collect() site(s): $unregistered — a library collect " +
-      "may only gather BOUNDED model/manifest state (centroids, " +
-      "codebooks, merge lists, manifest entries), never row data. " +
+    SourceLint.check(".collect()", registry,
+      "unaudited .collect() site(s)",
+      "a library collect may only gather BOUNDED model/manifest state " +
+      "(centroids, codebooks, merge lists, manifest entries), never " +
+      "row data. " +
       "Audit the new site and register it in CollectLintSpec.")
-    // registry hygiene: a stale entry (file dropped its collects) should
-    // be pruned so the allowlist stays an honest census
-    val stale = registry.filter { case (f, (n, _)) =>
-      n > 0 && counts.getOrElse(f, 0) < n
-    }
-    assert(stale.isEmpty,
-      s"registry overcounts: $stale — prune the allowlist to match")
   }
 }

@@ -44,41 +44,11 @@ class FoldLintSpec extends AnyFunSuite {
 
   test("every array-growing aggregate accumulator in the library is " +
        "registered with a boundedness argument") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"lint must run from the repo root, cwd=${System.getProperty("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
-    val files =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala")).toList
-      } finally walk.close()
-    assert(files.nonEmpty)
-    val needle = "concat(acc"
-    val counts = files.map { p =>
-      val rel = root.relativize(p).toString.replace('\\', '/')
-      val src = java.nio.file.Files.readString(p)
-      val n = src.linesIterator
-        .filterNot(_.trim.startsWith("//"))
-        .filterNot(_.trim.startsWith("*"))
-        .map(l => l.sliding(needle.length).count(_ == needle))
-        .sum
-      rel -> n
-    }.filter(_._2 > 0).toMap
-    val unregistered = counts.filter { case (f, n) =>
-      registry.get(f).forall(_._1 < n)
-    }
-    assert(unregistered.isEmpty,
-      s"unaudited array-growing fold site(s): $unregistered — a " +
-      "concat(acc…) accumulator copies the whole array each step, " +
+    SourceLint.check("concat(acc", registry,
+      "unaudited array-growing fold site(s)",
+      "a concat(acc…) accumulator copies the whole array each step, " +
       "O(n²) inside one task. Bound the folded array's length (a " +
       "parameter, a doc, a loud maxLen guard) and register the site " +
       "in FoldLintSpec with the argument.")
-    val stale = registry.filter { case (f, (n, _)) =>
-      n > 0 && counts.getOrElse(f, 0) < n
-    }
-    assert(stale.isEmpty,
-      s"registry overcounts: $stale — prune the allowlist to match")
   }
 }

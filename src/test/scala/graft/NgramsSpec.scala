@@ -439,6 +439,19 @@ class NgramsSpec extends SparkTestBase {
     assert(Ngrams.bpeTrain(df, numMerges = 1)
       .as[(Long, String, String, String, Long)].collect().toSeq ===
       Seq((1L, "a", "b", "ab", 2L)))
+    // the harness reset frees all three kinds of state in one call: the
+    // BPE memo, the unigram memo and an operator's per-query frames
+    Ngrams.unigramTrain(df, vocabSize = 4, maxPieceLen = 2, rounds = 1,
+      seedSize = 4).count()
+    graft.operators.Dedup.allPairsJaccard(df, "doc_id", "text", 0.5)
+    assert(OpCaches.registered > base + 2,
+      "BPE memo + unigram memo + per-query frames all registered")
+    OpCaches.resetQueryState()
+    assert(OpCaches.registered === 0,
+      "resetQueryState leaves no frame of either scope registered")
+    Ngrams.bpeTrain(df, numMerges = 1).count()
+    assert(OpCaches.registered === 1,
+      "a retrain after the reset trains and registers again")
     Ngrams.clearBpeCache()
   }
 

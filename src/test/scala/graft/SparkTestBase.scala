@@ -11,14 +11,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   import org.apache.spark.sql.DataFrame
 
   /** Per-suite teardown: free operator-internal persisted state (both
-    * per-query frames and the session-scoped BPE training memo) so one
+    * per-query frames and the session-scoped training memos) so one
     * suite's caches don't bill memory to suites that run after it. */
   override protected def afterAll(): Unit = {
-    try {
-      graft.operators.OpCaches.release()
-      graft.operators.Ngrams.clearBpeCache()
-    graft.operators.Ngrams.clearUnigramCache()
-    } finally super.afterAll()
+    try graft.operators.OpCaches.resetQueryState()
+    finally super.afterAll()
   }
 
   /** Rows of a DataFrame as a sorted Seq of string-rendered tuples — a
@@ -30,17 +27,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = SparkSessionFactory.create(
+    master = "local[4]", shufflePartitions = 4, appName = "graft-tests",
+    extraConf = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

@@ -62,41 +62,11 @@ class WindowLintSpec extends AnyFunSuite {
 
   test("every unpartitioned Window.orderBy call site in the library is " +
        "registered with a boundedness argument") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"lint must run from the repo root, cwd=${System.getProperty("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
-    val files =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala")).toList
-      } finally walk.close()
-    assert(files.nonEmpty)
-    val needle = "Window.orderBy"
-    val counts = files.map { p =>
-      val rel = root.relativize(p).toString.replace('\\', '/')
-      val src = java.nio.file.Files.readString(p)
-      val n = src.linesIterator
-        .filterNot(_.trim.startsWith("//"))
-        .filterNot(_.trim.startsWith("*"))
-        .map(l => l.sliding(needle.length).count(_ == needle))
-        .sum
-      rel -> n
-    }.filter(_._2 > 0).toMap
-    val unregistered = counts.filter { case (f, n) =>
-      registry.get(f).forall(_._1 < n)
-    }
-    assert(unregistered.isEmpty,
-      s"unaudited unpartitioned-window site(s): $unregistered — a " +
-      "Window.orderBy with no partitionBy serializes its whole input " +
+    SourceLint.check("Window.orderBy", registry,
+      "unaudited unpartitioned-window site(s)",
+      "a Window.orderBy with no partitionBy serializes its whole input " +
       "into one task; it may only run over bounded histogram/model/" +
       "domain-sized tables. Audit the new site's input cardinality and " +
       "register it in WindowLintSpec.")
-    val stale = registry.filter { case (f, (n, _)) =>
-      n > 0 && counts.getOrElse(f, 0) < n
-    }
-    assert(stale.isEmpty,
-      s"registry overcounts: $stale — prune the allowlist to match")
   }
 }
