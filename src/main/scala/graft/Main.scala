@@ -19,17 +19,19 @@ package graft
   */
 object Main {
   def main(args: Array[String]): Unit = {
+    val usage =
+      "usage: graft.Main <songJsonGlob> <logJsonGlob> <outDir> [k=v ...]"
     if (args.length < 3) {
-      System.err.println(
-        "usage: graft.Main <songJsonGlob> <logJsonGlob> <outDir> [k=v ...]")
+      System.err.println(usage)
       sys.exit(1)
     }
     val Array(songGlob, logGlob, outDir) = args.take(3)
-    val extraConf = args.drop(3).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => Some(k -> v)
-        case _           => None
-      }
+    // a mistyped conf (`key:value`, `=value`) fails here, before the
+    // session is built, instead of running silently on the defaults
+    val extraConf = args.drop(3).map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"conf argument '$kv' is not key=value; $usage")
+      kv.take(i) -> kv.drop(i + 1)
     }.toMap
     // under spark-submit the master comes from the submit command; the
     // factory default only applies when launched standalone

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Round-19 optimization evidence: dump `.explain("formatted")` for a
+/** Round-20 optimization evidence: dump `.explain("formatted")` for a
   * named set of queries into plans/r20/<query>_<tag>.txt — the
   * before/after plan artifacts the optimization judge checks claims
   * against (the full-roster twin is PlanDump → PLANS.md).
@@ -11,6 +11,8 @@ import java.nio.file.{Files, Paths}
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.PlanSnap <tag> <q1,q2,...> [sfDir]")
     val tag = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val d = if (args.length > 2) args(2) else "/root/testdata/sf0.001"

@@ -53,7 +53,7 @@ object SparkEntry {
   private def withScratchDir(prefix: String)
       (body: String => DataFrame): DataFrame = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
-    try body(p.toString).localCheckpoint(true)
+    try operators.OpCaches.cutNow(body(p.toString))
     finally deleteTree(p)
   }
 
@@ -2999,12 +2999,12 @@ object SparkEntry {
       // materializeExamples JOIN, where a columnar-cache
       // InMemoryRelation's unknown size defeats broadcast/AQE planning
       // (the Similarity.semDedup lesson)
-      val enc = Ngrams.unigramEncodeWithVocab(
+      val enc = operators.OpCaches.cutNow(Ngrams.unigramEncodeWithVocab(
           t(s, d, "documents").filter(col("doc_id") < 200),
           Ngrams.unigramTrain(t(s, d, "documents"),
             vocabSize = uniVocabSize, maxPieceLen = uniMaxPiece,
             rounds = uniRounds, seedSize = uniSeedSize),
-          maxPieceLen = uniMaxPiece).localCheckpoint(eager = true)
+          maxPieceLen = uniMaxPiece))
       val keyed = enc.join(
           docsSpread(s, d).select(col("doc_id"), col("source")),
           Seq("doc_id"))
@@ -3025,8 +3025,8 @@ object SparkEntry {
       // eager localCheckpoint, NOT .persist() (same argument as
       // q_unigram_examples: materialize once, keep the downstream join
       // AQE/broadcast-plannable)
-      val enc = Ngrams.bpeEncode(docs, docs.filter(col("doc_id") < 200),
-          numMerges = bpeOracleMerges).localCheckpoint(eager = true)
+      val enc = operators.OpCaches.cutNow(Ngrams.bpeEncode(docs,
+          docs.filter(col("doc_id") < 200), numMerges = bpeOracleMerges))
       val keyed = enc.join(docs.select(col("doc_id"), col("source")),
           Seq("doc_id"))
       val spans = Mixing.packContiguous(keyed, "source", "doc_id",

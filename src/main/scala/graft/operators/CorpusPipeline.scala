@@ -76,7 +76,7 @@ object CorpusPipeline {
     // chains per consumer (the multi-consumer-seam convention).
     val spanCut = substringCutTokens match {
       case Some(n) =>
-        Dedup.removeSubstringDups(preDeduped.localCheckpoint(true),
+        Dedup.removeSubstringDups(OpCaches.cutNow(preDeduped),
             idCol, textCol, n)
           .select(id, col("text_cut").as(textCol))
       case None => preDeduped

@@ -824,8 +824,8 @@ object Dedup {
     }
     // each side feeds its count and the hit semi-join: checkpoint so
     // truth and candidate derivations run once (r19, guide §2.4)
-    val t = canon(truthPairs).localCheckpoint(eager = false)
-    val c = canon(candPairs).localCheckpoint(eager = false)
+    val t = OpCaches.cut(canon(truthPairs))
+    val c = OpCaches.cut(canon(candPairs))
     val hits = c.join(t, Seq("a", "b"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
     // Double, not Long: n·(n−1)/2 overflows a long at n ≈ 4.3e9 —
@@ -892,16 +892,13 @@ object Dedup {
     * one verification round). The driver-side loop reads only a
     * changed-count aggregate, never data.
     *
-    * Each generation is eagerly `localCheckpoint`ed, which BOTH caches
-    * the rows and truncates logical lineage. Truncation is load-bearing,
-    * not hygiene: the iteration body references its input twice
-    * (propagation + jump), so without it the logical plan doubles per
-    * round and plan-tree rendering alone OOMs the driver near ~8 rounds
-    * — persist() caches execution but not the plan. Local checkpoints
-    * are non-reliable (an executor loss forces recompute from the last
-    * surviving generation); a production run on flaky clusters should
-    * set a checkpoint dir and swap in reliable `checkpoint()` —
-    * same lineage-cut role. Superseded generations are released by
+    * Each generation is cut ([[OpCaches.cut]], which also owns the
+    * durability trade-off), which BOTH caches the rows and truncates
+    * logical lineage. Truncation is load-bearing, not hygiene: the
+    * iteration body references its input twice (propagation + jump), so
+    * without it the logical plan doubles per round and plan-tree
+    * rendering alone OOMs the driver near ~8 rounds — persist() caches
+    * execution but not the plan. Superseded generations are released by
     * Spark's ContextCleaner once the loop drops their references; the
     * returned frame is backed by the final checkpoint (one (id, comp)
     * row per near-dup doc — small by construction).
@@ -934,10 +931,9 @@ object Dedup {
     // feed 2-3 consumers, and the changed-count action materializes
     // the round anyway — eager checkpoints only added one extra
     // blocking driver job per round on top of that materialization
-    var labels = edges
+    var labels = OpCaches.cut(edges
       .groupBy(col("src").as("id")).agg(min(col("dst")).as("nbr"))
-      .select(col("id"), least(col("id"), col("nbr")).as("comp"))
-      .localCheckpoint(eager = false)
+      .select(col("id"), least(col("id"), col("nbr")).as("comp")))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -947,11 +943,10 @@ object Dedup {
       // (a) propagate: min of own label and neighbors' labels.
       // Checkpointed BEFORE the jump so the jump's two references read
       // a flat LogicalRDD, not a growing tree (see scaladoc).
-      val prop = labels.join(nbrMin, Seq("id"), "left")
+      val prop = OpCaches.cut(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("comp"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-            .as("comp1"))
-        .localCheckpoint(eager = false)
+            .as("comp1")))
       changed = prop.filter(col("comp1") < col("comp")).count()
       if (changed > 0) {
         // (b) path-halve: adopt the propagated label's own propagated
@@ -959,11 +954,11 @@ object Dedup {
         // cannot change anything then, so converged graphs (stars,
         // cliques — the near-dup shape) never pay this join at all.
         val lookup = prop.select(col("id").as("__j"), col("comp1").as("__jc"))
-        labels = prop.join(lookup, col("comp1") === col("__j"), "left")
-          .select(col("id"),
-            least(col("comp1"), coalesce(col("__jc"), col("comp1")))
-              .as("comp"))
-          .localCheckpoint(eager = false)
+        labels = OpCaches.cut(
+          prop.join(lookup, col("comp1") === col("__j"), "left")
+            .select(col("id"),
+              least(col("comp1"), coalesce(col("__jc"), col("comp1")))
+                .as("comp")))
       } else {
         labels = prop.select(col("id"), col("comp1").as("comp"))
       }
@@ -1028,12 +1023,11 @@ object Dedup {
             col(idCol))
           .limit(truthSample)
       else df
-    val exact = allPairsJaccard(truthDocs, idCol, textCol, threshold,
-        shingleN)
-      .select(col("doc_a"), col("doc_b"))
-      // truth count + hit semi-join both read it: checkpoint so the
-      // exact PPJoin truth runs once (r19, guide §2.4)
-      .localCheckpoint(eager = false)
+    // truth count + hit semi-join both read it: cut so the exact
+    // PPJoin truth runs once (r19, guide §2.4)
+    val exact = OpCaches.cut(allPairsJaccard(truthDocs, idCol, textCol,
+        threshold, shingleN)
+      .select(col("doc_a"), col("doc_b")))
     val truth = exact.agg(count(lit(1)).as("truth"))
     val hits = exact.join(lsh, Seq("doc_a", "doc_b"), "left_semi")
       .agg(count(lit(1)).as("__hits"))
@@ -1075,18 +1069,17 @@ object Dedup {
     // keyed feeds both self-join sides and truthPairs feeds both the
     // truth count and the hit semi-join — lazy checkpoints compute the
     // tokenize+sort pass and the truth join once each (r19, guide §2.4)
-    val keyed = Ops.spread(df.select(col(idCol), col(textCol)), col(idCol))
-      .select(col(idCol).as("id"),
-        sort_array(array_distinct(split(col(textCol), " "))).as("key"))
-      .localCheckpoint(eager = false)
+    val keyed = OpCaches.cut(
+      Ops.spread(df.select(col(idCol), col(textCol)), col(idCol))
+        .select(col(idCol).as("id"),
+          sort_array(array_distinct(split(col(textCol), " "))).as("key")))
     val a = keyed.select(col("id").as("doc_a"), col("key").as("ka"),
       xxhash64(col("key")).as("kh"))
     val b = keyed.select(col("id").as("doc_b"), col("key").as("kb"),
       xxhash64(col("key")).as("kh"))
-    val truthPairs = a.join(b, Seq("kh"))
+    val truthPairs = OpCaches.cut(a.join(b, Seq("kh"))
       .filter(col("ka") === col("kb") && col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
+      .select("doc_a", "doc_b"))
     val truth = truthPairs.agg(count(lit(1)).as("truth"))
     val hits = truthPairs.join(found, Seq("doc_a", "doc_b"), "left_semi")
       .agg(count(lit(1)).as("__hits"))
@@ -1425,16 +1418,14 @@ object Dedup {
     // term dictionary: one exchange on the string key builds (term → id,
     // df); everything downstream joins and orders on the long id. The
     // checkpoint freezes the monotonic ids (plan leaf, computed once).
-    val dict = tfStr.groupBy("tok")
+    val dict = OpCaches.cut(tfStr.groupBy("tok")
       .agg(count(lit(1)).as("tok_df"))
-      .withColumn("tid", monotonically_increasing_id())
-      .localCheckpoint(eager = false)
-    val tf = tfStr.join(dict, "tok")
-      .select(col("doc_id"), col("tid"), col("tok_df"), col("tf"))
-      // tf feeds the norm aggregate AND the weight join — checkpoint so
-      // the shingle explode+count+dictionary join runs once (r19/r20,
-      // guide §2.4)
-      .localCheckpoint(eager = false)
+      .withColumn("tid", monotonically_increasing_id()))
+    // tf feeds the norm aggregate AND the weight join — cut so the
+    // shingle explode+count+dictionary join runs once (r19/r20, guide
+    // §2.4)
+    val tf = OpCaches.cut(tfStr.join(dict, "tok")
+      .select(col("doc_id"), col("tid"), col("tok_df"), col("tf")))
     val nrm = tf.groupBy("doc_id")
       .agg(sqrt(sum(col("tf") * col("tf")).cast("double")).as("nrm"))
     val wts = OpCaches.register(tf.join(nrm, "doc_id")

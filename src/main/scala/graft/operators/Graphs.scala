@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * partial combine, shuffles ids+longs only), one scalar dangling-mass
   * aggregate broadcast back, one left join onto the static node table.
   * No driver-side state beyond the loop counter; nothing quadratic;
-  * lineage is cut every 4 iterations (localCheckpoint) like the
+  * lineage is cut every 4 iterations ([[OpCaches.cut]]) like the
   * connected-components loop, so long runs don't accrete plan depth.
   */
 object Graphs {
@@ -115,33 +115,24 @@ object Graphs {
     // columnar cache's unknown-size InMemoryRelation defeats the
     // broadcast/AQE planning of the per-iteration joins, while the
     // checkpointed blocks keep accurate sizes
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        positiveWeight(col(weightCol), "pageRankWeighted").as("w"))
-      .localCheckpoint(eager = true)
+    val e = OpCaches.cutNow(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst"),
+      positiveWeight(col(weightCol), "pageRankWeighted").as("w")))
     // Static tables and EVERY iteration's rank table materialize as
-    // lazy localCheckpoints (r19, guide §2.4/§5; cluster durability:
-    // see OpCaches' "lazy localCheckpoint pattern" doc): `ranks` is consumed
-    // THREE times per iteration (share join, dangling anti-join, the
-    // teleport projection) and `deg` twice, so the inline formulation
-    // compounded 3^i duplicated subtrees into the final physical plan
-    // (791 operators / 222 ExistingRDD scans at 3 iterations — see
-    // plans/r19/q_pagerank_before.txt). Exchange reuse hid some of the
-    // recompute but none of the planning/codegen tax. A lazy local
-    // checkpoint is a plan leaf: each iteration now plans ~a dozen
+    // lazy cuts keyed on their node column (r19, guide §2.4/§5):
+    // `ranks` is consumed THREE times per iteration (share join,
+    // dangling anti-join, the teleport projection) and `deg` twice, so
+    // the inline formulation compounded 3^i duplicated subtrees into
+    // the final physical plan (791 operators / 222 ExistingRDD scans at
+    // 3 iterations — see plans/r19/q_pagerank_before.txt). Exchange
+    // reuse hid some of the recompute but none of the planning/codegen
+    // tax. A lazy cut is a plan leaf: each iteration now plans ~a dozen
     // operators and executes exactly once; blocks are (node, long)
     // rows — O(|V|) memory/disk, the standard Pregel superstep shape.
-    // r20: pin checkpointed tables at cluster parallelism (the hitsLoop
-    // rationale — AQE rightly coalesces KB-scale aggregate outputs to
-    // one partition, but a checkpoint freezes that layout and the next
-    // round's edge join then streams a single-partition side serially)
-    val par = e.sparkSession.sparkContext.defaultParallelism
-    val degCp = e.groupBy("src").agg(sum(col("w")).as("deg"))
-      .repartition(par, col("src"))
-      .localCheckpoint(eager = false)
-    val nodesCp = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .repartition(par, col("node"))
-      .localCheckpoint(eager = false)
+    val degCp = OpCaches.cut(e.groupBy("src").agg(sum(col("w")).as("deg")),
+      col("src"))
+    val nodesCp = OpCaches.cut(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), col("node"))
     val nDf = nodesCp.agg(count(lit(1)).as("__n"))
     var ranks = nodesCp.crossJoin(broadcast(nDf))
       .selectExpr("node", s"${Scale}L div __n as rank", "__n")
@@ -162,9 +153,7 @@ object Graphs {
             s" + (${dampingPct}L * (coalesce(contrib, 0L) + __mass div __n))" +
             " div 100L as rank",
           "__n")
-      if (i < iterations)
-        ranks = ranks.repartition(par, col("node"))
-          .localCheckpoint(eager = false)
+      if (i < iterations) ranks = OpCaches.cut(ranks, col("node"))
     }
     ranks.select(col("node"), col("rank").as("rank_fp"),
       (col("rank").cast("double") / Scale.toDouble).as("rank"))
@@ -197,11 +186,10 @@ object Graphs {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100,
       "dampingPct must be a percent")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        positiveWeight(col(weightCol), "personalizedPageRank").as("w"))
-      .localCheckpoint(eager = true)
-    val sd = seeds.select(col(seedCol).as("node")).distinct()
-      .localCheckpoint(eager = true)
+    val e = OpCaches.cutNow(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst"),
+      positiveWeight(col(weightCol), "personalizedPageRank").as("w")))
+    val sd = OpCaches.cutNow(seeds.select(col(seedCol).as("node")).distinct())
     val nSeeds = sd.count()
     require(nSeeds > 0, "personalizedPageRank needs a non-empty seed set")
     val nodes = e.select(col("src").as("node"))
@@ -210,10 +198,8 @@ object Graphs {
     // per-iteration lazy checkpoints, the [[pageRankWeighted]] r19
     // rationale: ranks is consumed 3× per iteration, deg 2× — the
     // inline form compounded to a 692-operator plan at 3 iterations
-    val par = e.sparkSession.sparkContext.defaultParallelism
-    val deg = e.groupBy("src").agg(sum(col("w")).as("deg"))
-      .repartition(par, col("src"))
-      .localCheckpoint(eager = false)   // pinned at parallelism (r20)
+    val deg = OpCaches.cut(e.groupBy("src").agg(sum(col("w")).as("deg")),
+      col("src"))
     var ranks = nodes
       .join(sd.withColumn("__s", lit(true)), Seq("node"), "left")
       .selectExpr("node", "coalesce(__s, false) as __seed",
@@ -238,9 +224,7 @@ object Graphs {
             s" + __mass div ${nSeeds}L)) div 100L" +
             s" else (${dampingPct}L * coalesce(contrib, 0L)) div 100L" +
             " end as rank")
-      if (i < iterations)
-        ranks = ranks.repartition(par, col("node"))
-          .localCheckpoint(eager = false)
+      if (i < iterations) ranks = OpCaches.cut(ranks, col("node"))
     }
     ranks.select(col("node"), col("rank").as("rank_fp"),
       (col("rank").cast("double") / Scale.toDouble).as("rank"),
@@ -301,8 +285,7 @@ object Graphs {
       labels = counted.groupBy("node")
         .agg(max_by(col("label"),
           struct(col("c"), (-col("label")).as("nl"))).as("label"))
-      if (i % 4 == 0 && i < iterations)
-        labels = labels.localCheckpoint(eager = false)
+      if (i % 4 == 0 && i < iterations) labels = OpCaches.cut(labels)
     }
     // community sizes via a window, NOT a groupBy+self-join: the join
     // form consumes `labels` twice and re-executes the whole iteration
@@ -349,7 +332,7 @@ object Graphs {
     * Scale shape: per round two edge-to-score equi-joins + two
     * map-side-combined aggregates (ids and decimals only on every
     * exchange) and two one-row broadcast totals; the distinct edge
-    * list materializes once (eager localCheckpoint, the
+    * list materializes once (eager [[OpCaches.cutNow]], the
     * [[pageRankWeighted]] lesson). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            rounds: Int = 2, saltShards: Int = 1): DataFrame =
@@ -416,17 +399,16 @@ object Graphs {
             lit("hitsWeighted: edge weight must be < 2^23 to keep w*score"
               + " in long range, got "), col("w").cast("string"))))
           .otherwise(col("w")).as("w"))
-    val e = e0.localCheckpoint(eager = true)
+    val e = OpCaches.cutNow(e0)
     // nodes feeds three consumers (the count, the init, the final
-    // re-attach; cluster durability: see OpCaches' "lazy
-    // localCheckpoint pattern" doc) and each round's raw-sum table feeds two (its own
-    // normalization total + the normalized scores) — lazy localCheck-
-    // points make each a plan leaf computed once (r19, guide §2.4):
-    // the inline form compounded to a 1123-operator / 284-RDD-scan
-    // plan at 2 rounds (plans/r19/q_hits_before.txt)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = false)
+    // re-attach) and each round's raw-sum table feeds two (its own
+    // normalization total + the normalized scores) — lazy cuts make
+    // each a plan leaf computed once (r19, guide §2.4), the score
+    // tables pinned on `node`: the inline form compounded to a
+    // 1123-operator / 284-RDD-scan plan at 2 rounds
+    // (plans/r19/q_hits_before.txt)
+    val nodes = OpCaches.cut(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val nDf = nodes.agg(count(lit(1)).as("__n"))
     val radix = 1073741824L // 2³⁰ limb radix (see weightedPercentiles)
     val radixW = 4294967296L // 2³² product-limb radix (weighted path)
@@ -477,32 +459,19 @@ object Graphs {
               .otherwise(col("__lo").cast(dec) + col("__hi").cast(dec) * rdx)
               .as("__p"))
           .groupBy("node").agg(sum(col("__p")).as(out))
-    // Pin the per-round score tables at cluster parallelism before the
-    // checkpoint (r20): AQE correctly coalesces the KB-scale aggregate
-    // output to one partition, but the checkpoint freezes that layout
-    // and the NEXT round's edge join then streams a 1-partition side —
-    // measured as 0.5-1.1 s single-task stages per round at sf0.1, and
-    // the reason q_hits scaled flat 8c->32c. defaultParallelism is
-    // runtime cluster state, not a tuned constant; the extra exchange
-    // moves only the |V|-sized (node, long) table.
-    val par = e.sparkSession.sparkContext.defaultParallelism
     var hub = nodes.crossJoin(broadcast(nDf))
       .selectExpr("node", s"${Scale}L div __n as h")
     var auth: DataFrame = null
     for (_ <- 1 to rounds) {
-      val araw = sumSide(
+      val araw = OpCaches.cut(sumSide(
         e.join(hub.select(col("node").as("src"), col("h")), "src"),
-        "h", "dst", "src", "auth", "ar")
-        .repartition(par, col("node"))
-        .localCheckpoint(eager = false)
+        "h", "dst", "src", "auth", "ar"), col("node"))
       val atot = araw.agg(sum(col("ar")).as("__ta"))
       auth = araw.crossJoin(broadcast(atot))
         .selectExpr("node", s"(ar * ${Scale}L) div __ta as a")
-      val hraw = sumSide(
+      val hraw = OpCaches.cut(sumSide(
         e.join(auth.select(col("node").as("dst"), col("a")), "dst"),
-        "a", "src", "dst", "hub", "hr")
-        .repartition(par, col("node"))
-        .localCheckpoint(eager = false)
+        "a", "src", "dst", "hub", "hr"), col("node"))
       val htot = hraw.agg(sum(col("hr")).as("__th"))
       hub = hraw.crossJoin(broadcast(htot))
         .selectExpr("node", s"(hr * ${Scale}L) div __th as h")
@@ -558,13 +527,13 @@ object Graphs {
     // node list), dir three (adjacency build + both sides of the
     // pairing join), adj two — without materialization the orientation
     // join re-executed per consumer (the before-plan repeats the
-    // deg/dir subtree; plans/r19/q_triangles_before.txt). Lazy local-
-    // checkpoints make each a computed-once leaf (r19, guide §2.4);
-    // blocks are ids/arrays already bounded by the arboricity argument.
-    val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("__deg"))
-      .localCheckpoint(eager = false)
-    val dir = e
+    // deg/dir subtree; plans/r19/q_triangles_before.txt). Lazy cuts
+    // make each a computed-once leaf (r19, guide §2.4); blocks are
+    // ids/arrays already bounded by the arboricity argument.
+    val deg = OpCaches.cut(
+      e.select(explode(array(col("u"), col("v"))).as("node"))
+        .groupBy(col("node")).agg(count(lit(1)).as("__deg")))
+    val dir = OpCaches.cut(e
       .join(deg.select(col("node").as("u"), col("__deg").as("__du")), "u")
       .join(deg.select(col("node").as("v"), col("__deg").as("__dv")), "v")
       .select(when(col("__du") < col("__dv") ||
@@ -572,11 +541,9 @@ object Graphs {
           struct(col("u").as("a"), col("v").as("b")))
         .otherwise(struct(col("v").as("a"), col("u").as("b")))
         .as("o"))
-      .select(col("o.a").as("a"), col("o.b").as("b"))
-      .localCheckpoint(eager = false)
-    val adj = dir.groupBy(col("a"))
-      .agg(sort_array(collect_list(col("b"))).as("__nb"))
-      .localCheckpoint(eager = false)
+      .select(col("o.a").as("a"), col("o.b").as("b")))
+    val adj = OpCaches.cut(dir.groupBy(col("a"))
+      .agg(sort_array(collect_list(col("b"))).as("__nb")))
     val paired = dir
       .join(adj.select(col("a"), col("__nb").as("__na")), Seq("a"))
       .join(adj.select(col("a").as("b"), col("__nb")), Seq("b"), "left")
@@ -664,10 +631,9 @@ object Graphs {
       .select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    var adj = und.unionByName(
+    var adj = OpCaches.cutNow(und.unionByName(
         und.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     var dropped = 1L
     var it = 0
     while (dropped > 0 && it < maxIters) {
@@ -677,7 +643,7 @@ object Graphs {
         .join(keep, Seq("a"), "left_semi")
         .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-      val cp = next.localCheckpoint(it % 4 == 3)
+      val cp = if (it % 4 == 3) OpCaches.cutNow(next) else OpCaches.cut(next)
       dropped = adj.count() - cp.count()
       adj = cp
       it += 1
@@ -709,7 +675,7 @@ object Graphs {
     * horizon are absent (callers wanting ∞ left-join the node set).
     *
     * Ids only on every exchange: (node: long, dist: long). The visited
-    * set localCheckpoints each round, so the plan never re-derives
+    * set is cut each round, so the plan never re-derives
     * round i−1 inside round i (the [[kCore]]/[[pageRank]] lineage-cut
     * convention); the symmetrized edge table checkpoints once and is
     * reused by all rounds. `maxHops` is the loud bound (≤ 64): BFS
@@ -732,16 +698,14 @@ object Graphs {
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).cast("long").as("__s"),
         col(dstCol).cast("long").as("__d"))
-    val adj = (if (directed) fwd
-               else fwd.unionByName(
-                 fwd.select(col("__d").as("__s"), col("__s").as("__d"))))
-      .distinct()
-      .localCheckpoint(true)
-    var visited = seeds
+    val adj = OpCaches.cutNow((if (directed) fwd
+        else fwd.unionByName(
+          fwd.select(col("__d").as("__s"), col("__s").as("__d"))))
+      .distinct())
+    var visited = OpCaches.cutNow(seeds
       .filter(col(seedCol).isNotNull)
       .select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .withColumn("dist", lit(0L)))
     var frontier = visited
     for (h <- 1 to maxHops) {
       val next = frontier
@@ -753,7 +717,7 @@ object Graphs {
       // (frontier filter, anti-join, union) — the lazy checkpoint
       // dedupes those identically while letting ONE final action drive
       // all hops instead of paying a blocking driver job per hop
-      visited = visited.unionByName(next).localCheckpoint(eager = false)
+      visited = OpCaches.cut(visited.unionByName(next))
       frontier = visited.filter(col("dist") === h)
     }
     visited

@@ -332,7 +332,7 @@ object Ngrams {
     * plus 32k affected-subset scans. Per round the driver still
     * collects exactly one argmax row (bounded driver state, the same
     * contract as the k-means centroid collects). Lineage is
-    * localCheckpoint-cut every 4 rounds like [[Graphs.pageRank]] so
+    * cut ([[OpCaches.cutNow]]) every 4 rounds like [[Graphs.pageRank]] so
     * the plan stays flat.
     *
     * Symbol representation: each word's symbol sequence is one string
@@ -665,7 +665,7 @@ object Ngrams {
         // job per round for nothing.
         val (wm, pm) =
           if (i % 4 == 0)
-            (nextWords.localCheckpoint(true), nextPairs.localCheckpoint(true))
+            (OpCaches.cutNow(nextWords), OpCaches.cutNow(nextPairs))
           else {
             val w2 = nextWords.persist(); val p2 = nextPairs.persist()
             w2.count()
@@ -916,8 +916,7 @@ object Ngrams {
     // checkpoint makes it a plan leaf computed once (r19): the inline
     // form compounded to ~1700–2000-operator physical plans across the
     // family (plans/r19/q_unigram_*_before.txt)
-    var vocab = unigramSeedFrom(wc, maxPieceLen, seedSize)
-      .localCheckpoint(eager = false)
+    var vocab = OpCaches.cut(unigramSeedFrom(wc, maxPieceLen, seedSize))
     for (_ <- 1 to rounds) {
       val seg = unigramViterbi(wc, unigramWithLogp(vocab), maxPieceLen)
       val usage = seg.filter(col("pieces").isNotNull)
@@ -934,7 +933,7 @@ object Ngrams {
         .orderBy(col("u").desc, col("piece"))
         .limit(vocabSize)
         .select(col("piece"), col("u").as("cnt"))
-      vocab = singles.unionByName(multis).localCheckpoint(eager = false)
+      vocab = OpCaches.cut(singles.unionByName(multis))
     }
     unigramWithLogp(vocab)
   }

@@ -600,12 +600,13 @@ object Profiling {
                  yCol: String, maxCells: Int = 10000): DataFrame = {
     require(maxCells > 0, s"maxCells must be positive, got $maxCells")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .select(col(groupCol).as("__g"), col(xCol).as("__x"),
-        col(yCol).as("__y"))
-      .groupBy(col("__g"), col("__x"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = true) // feeds marginals AND the pair join
+    // cut: feeds marginals AND the pair join
+    val cells = OpCaches.cutNow(
+      df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+        .select(col(groupCol).as("__g"), col(xCol).as("__x"),
+          col(yCol).as("__y"))
+        .groupBy(col("__g"), col("__x"), col("__y"))
+        .agg(count(lit(1)).as("__c")))
     // loud cells-cap guard: count cells per group (group-count-sized,
     // broadcast onto the checkpointed cell table) and raise BEFORE the
     // quadratic pair join sees an over-cap group — the guard rides the
@@ -1782,9 +1783,8 @@ object Profiling {
     // also serializes the (possibly heavy) upstream p-value
     // computation onto one core — measured 135 s vs 0.7 s on the
     // q_bh registration (SURVEY §6.6e)
-    val base = df.filter(p.isNotNull && p > 0 && p <= 1)
-      .select(col(testCol).as("__t"), p.as("__p"))
-      .localCheckpoint(true)
+    val base = OpCaches.cutNow(df.filter(p.isNotNull && p > 0 && p <= 1)
+      .select(col(testCol).as("__t"), p.as("__p")))
     val wUp = Window.orderBy(col("__p").asc, col("__t").asc)
     val wDown = Window.orderBy(col("__p").desc, col("__t").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1827,12 +1827,11 @@ object Profiling {
   def fleissKappa(df: DataFrame, itemCol: String, raterCol: String,
                   catCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 9)
-    val cells = df
+    val cells = OpCaches.cutNow(df
       .filter(col(itemCol).isNotNull && col(raterCol).isNotNull &&
         col(catCol).isNotNull)
       .groupBy(col(itemCol).as("__i"), col(catCol).as("__c"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(eager = true)
+      .agg(count(lit(1)).as("__n")))
     val items = cells.groupBy(col("__i"))
       .agg(sum(col("__n")).as("__ni"),
         sum(col("__n") * (col("__n") - 1)).as("__agree"))

@@ -400,9 +400,8 @@ object Similarity {
     // the brute-force truth feeds both the hit semi-join and the truth
     // count — a lazy checkpoint computes the corpus truth scan once
     // (r19, guide §2.4); every ANN audit row paid it twice before
-    val exact = bruteForceTopK(corpus, queries, k, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(eager = false)
+    val exact = OpCaches.cut(bruteForceTopK(corpus, queries, k, idCol, vecCol)
+      .select(col("query_id"), col("neighbor_id")))
     val hits = approx.select(col("query_id"), col("neighbor_id"))
       .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
     hits.agg(count(lit(1)).as("__hits"))
@@ -547,9 +546,8 @@ object Similarity {
     // cell-keyed self-join, and a columnar-cache InMemoryRelation's
     // unknown size defeats broadcast/AQE planning of that join — the
     // measured-10x lesson recorded at Graphs.pageRankWeighted
-    val assigned =
-      assignToStoredCentroids(cents, corpus, idCol, vecCol)
-        .localCheckpoint(eager = true)
+    val assigned = OpCaches.cutNow(
+      assignToStoredCentroids(cents, corpus, idCol, vecCol))
     val dups = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") &&
         col(s"b.$idCol") < col(s"a.$idCol") &&
@@ -596,10 +594,9 @@ object Similarity {
     val b = v.select(col(idCol).as("__ib"), col(vecCol).as("__vb"))
     // consumed by the truth count AND the hit semi-join: checkpoint so
     // the deliberately-quadratic audit cosine join runs once (r19)
-    val truthIds = a.join(b, col("__ib") < col("__ia") &&
+    val truthIds = OpCaches.cut(a.join(b, col("__ib") < col("__ia") &&
         cosine(col("__va"), col("__vb")) >= threshold)
-      .select(col("__ia").as(idCol)).distinct()
-      .localCheckpoint(eager = false)
+      .select(col("__ia").as(idCol)).distinct())
     val truth = truthIds.agg(count(lit(1)).as("truth"))
     val hits = truthIds.join(flagged, Seq(idCol), "left_semi")
       .agg(count(lit(1)).as("__hits"))

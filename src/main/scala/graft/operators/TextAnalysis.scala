@@ -586,7 +586,7 @@ object TextAnalysis {
     * with the three iterations unrolled as CTEs.
     *
     * Scale: the feature table (one double + four longs per row)
-    * localCheckpoints once; each iteration is ONE map-side-combined
+    * is cut once; each iteration is ONE map-side-combined
     * aggregate whose result — n plus four gradient sums — is a single
     * driver row (the bounded-model-state collect, registered in
     * CollectLintSpec). Nothing else leaves the executors; iteration
@@ -599,10 +599,9 @@ object TextAnalysis {
     require(lr > 0 && lr <= 64, s"lr must be in (0, 64], got $lr")
     val spark = docs.sparkSession
     val fs = lrFeaturesFp(col(textCol))
-    val base = docs.filter(col(textCol).isNotNull)
+    val base = OpCaches.cutNow(docs.filter(col(textCol).isNotNull)
       .select((when(label, 1.0).otherwise(0.0)).as("__y") +:
-        fs.zipWithIndex.map { case (f, j) => f.as(s"__a$j") }: _*)
-      .localCheckpoint(true)
+        fs.zipWithIndex.map { case (f, j) => f.as(s"__a$j") }: _*))
     val w = Array(0L, 0L, 0L, 0L)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long, Long)]

@@ -451,20 +451,16 @@ object ManifestTable {
         if (df.columns.contains(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }: _*)
-    // materialize the aligned batch ONCE (r19, guide §2.4; cluster
-    // durability: see OpCaches' "lazy localCheckpoint pattern" doc —
-    // a remote-executor deployment of the COMMIT path wants a reliable
-    // checkpoint or replicated persist here, since a lost block fails
-    // the commit instead of recomputing): it feeds
+    // materialize the aligned batch ONCE (r19, guide §2.4): it feeds
     // two actions — the affected-bucket collect below and the merged
     // write — and without a checkpoint the caller's whole batch
     // derivation (often a real pipeline stage: a signature index, a
     // dedup pass) executed twice per commit. Blocks are batch-sized by
     // the ingest contract, the same bound as the write itself. The
-    // bucket column is a projection OVER the checkpointed leaf (one
-    // cheap hash per consumer) so the bucket COUNT can be chosen after
-    // the batch is materialized.
-    val cp = align(fresh0).localCheckpoint(eager = false)
+    // bucket column is a projection OVER the cut leaf (one cheap hash
+    // per consumer) so the bucket COUNT can be chosen after the batch
+    // is materialized.
+    val cp = graft.operators.OpCaches.cut(align(fresh0))
     // BUCKET COUNT (r20, guide §6 output file sizing): the bucket count
     // is a TABLE property — a key must land in the same bucket on every
     // commit or upserts silently duplicate — so the first commit

@@ -354,8 +354,8 @@ object StreamOps {
               .select(col("doc_b").as(idCol)).distinct()
             // eager localCheckpoint: survivors feed BOTH writes below,
             // and the signature upsert joins against manifest buckets
-            val survivors = vsIndex.join(laterDup, Seq(idCol), "left_anti")
-              .localCheckpoint(eager = true)
+            val survivors = graft.operators.OpCaches.cutNow(
+              vsIndex.join(laterDup, Seq(idCol), "left_anti"))
             survivors.write.mode("overwrite")
               .parquet(s"$survivorsPath/ingest_batch=$batchId")
             ManifestTable.upsertBatch(

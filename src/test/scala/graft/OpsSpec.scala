@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.Range
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
-import graft.operators.Ops
+import graft.operators.{OpCaches, Ops}
 
 class OpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -53,6 +55,23 @@ class OpsSpec extends SparkTestBase {
     assert(Ops.skyline2D(
       Seq((Option.empty[Double], Option(1.0))).toDF("x0", "y0"),
       "x0", "y0").count() === 0)
+  }
+
+  test("OpCaches.cut: keyed cuts pin the layout at defaultParallelism, " +
+       "unkeyed cuts keep it; both are lineage-free plan leaves") {
+    val par = spark.sparkContext.defaultParallelism
+    assert(par > 1, "the pin is only observable with > 1 core")
+    val oneSplit = spark.range(1000).toDF("k").coalesce(1)
+    val keyed = OpCaches.cut(oneSplit, col("k"))
+    val unkeyed = OpCaches.cut(oneSplit)
+    assert(keyed.rdd.getNumPartitions === par)
+    assert(unkeyed.rdd.getNumPartitions === 1)
+    for (df <- Seq(keyed, unkeyed)) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.isInstanceOf[LogicalRDD], plan.treeString)
+      assert(plan.collectFirst { case r: Range => r }.isEmpty,
+        plan.treeString)
+    }
   }
 
   test("skyline2D plan: local window partitioned by bucket, cross-bucket " +

@@ -27,4 +27,15 @@ class SessionFactorySpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException](Verify.main(Array("x")))
     assert(e.getMessage.contains("usage"))
   }
+
+  test("PlanSnap rejects a wrong argument count with its usage line") {
+    val e = intercept[IllegalArgumentException](PlanSnap.main(Array("x")))
+    assert(e.getMessage.contains("usage"))
+  }
+
+  test("Main rejects a trailing argument that is not key=value") {
+    val e = intercept[IllegalArgumentException](
+      Main.main(Array("a", "b", "c", "oops")))
+    assert(e.getMessage.contains("oops"))
+  }
 }

@@ -4,7 +4,7 @@ import org.scalatest.Assertions._
 
 /** The census behind the source lints (`CollectLintSpec`,
   * `SourceReadLintSpec`, `WindowLintSpec`, `FoldLintSpec`,
-  * `ResetLintSpec`): count a needle per file under
+  * `ResetLintSpec`, `CheckpointLintSpec`): count a needle per file under
   * `src/main/scala/graft`, outside comment lines, and hold the counts
   * against the spec's registry of audited sites. Counts are per file, so
   * moving a site within a file never trips a lint, while adding one
