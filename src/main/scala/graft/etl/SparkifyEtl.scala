@@ -171,6 +171,12 @@ object SparkifyEtl {
     * as NULL; under inference it failed analysis with an
     * `AnalysisException`.
     *
+    * Either path may be a file, a directory or a glob (the reference
+    * passes globs). Each is listed once, on the driver
+    * (`Sources.readJson`), so no listing job runs however many files
+    * match; a glob that matches nothing raises `AnalysisException`
+    * (`PATH_NOT_FOUND`).
+    *
     * `writeMode` defaults to `errorifexists` — the reference sets no
     * `.mode(...)` anywhere (etl_pipeline.py:113–115), so a re-run over an
     * existing output directory fails rather than clobbering it. Harness

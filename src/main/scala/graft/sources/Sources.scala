@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.GlobScan
 import org.apache.spark.sql.types.StructType
 
 /** Source / sink surface (SURVEY.md §2.1–2.2 re-expressed for production).
@@ -10,24 +13,32 @@ import org.apache.spark.sql.types.StructType
   * :238) — correct for exploration, wrong at 100 TB where the inference
   * pass is a full extra read. The JSON and CSV readers here take an
   * explicit `StructType` and never infer; `SourceReadLintSpec` keeps
-  * every JSON read in the library routed through `readJson`.
+  * every JSON read in the library routed through `readJson`. They also
+  * list their input once: the driver's glob is the scan's file index
+  * (`GlobScan`), so no per-file listing job runs however many files the
+  * glob matches (the reference globs three directory levels of song
+  * files).
   */
 object Sources {
 
   /** JSON-lines scan with an explicit schema — single pass, no inference
-    * job. `mode` picks the malformed-record policy:
+    * job, no listing job. `path` is a file, a directory or a glob, as for
+    * `spark.read`; a glob that matches nothing raises `PATH_NOT_FOUND`,
+    * and a streaming file-sink directory (`_spark_metadata` present) is
+    * refused. `mode` picks the malformed-record policy:
     * PERMISSIVE (default — bad rows become all-null), DROPMALFORMED
     * (bad rows vanish; fine for lossy corpus ingestion), FAILFAST
     * (throw — for feeds where corruption must stop the pipeline). */
   def readJson(spark: SparkSession, path: String, schema: StructType,
                mode: String = "PERMISSIVE"): DataFrame =
-    spark.read.schema(schema).option("mode", mode).json(path)
+    GlobScan.read(spark, path, schema, new JsonFileFormat, Map("mode" -> mode))
 
-  /** CSV scan with explicit schema; `header=true` skips the first line
-    * (names come from the schema, not the file). */
+  /** CSV scan with explicit schema, listed like `readJson`; `header=true`
+    * skips the first line (names come from the schema, not the file). */
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               header: Boolean = true): DataFrame =
-    spark.read.schema(schema).option("header", header.toString).csv(path)
+    GlobScan.read(spark, path, schema, new CSVFileFormat,
+      Map("header" -> header.toString))
 
   /** Parquet scan; partition columns are recovered from the directory
     * layout (S3's read-after-write pattern, etl_pipeline.py:250–257). */

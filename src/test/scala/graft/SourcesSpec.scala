@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,6 +19,110 @@ class SourcesSpec extends SparkTestBase {
     (1L, "alpha", 10.5, 2020), (2L, "beta", 20.25, 2020),
     (3L, "gamma", 30.0, 2021), (4L, "delta", 40.75, 2021)
   ).toDF("id", "name", "score", "yr")
+
+  private def put(path: String, text: String): Unit = {
+    Files.createDirectories(Paths.get(path).getParent)
+    Files.writeString(Paths.get(path), text)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener that
+    * sees only this body's events (the bus is drained on both sides). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    assert(ListenerDrain.drain(sc))
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      assert(ListenerDrain.drain(sc))
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val nestedSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("name", StringType), StructField("score", DoubleType)))
+
+  /** 34 one-row files two directory levels down (past the 32-path
+    * threshold at which `spark.read` lists its matches with a Spark job),
+    * one of them under `k=1/`, plus a hidden `_x` file the glob also
+    * matches. Returns the glob. */
+  private def nestedFixture(name: String, ext: String,
+                            row: Int => String): String = {
+    val root = s"$dir/$name"
+    for (i <- 0 until 34)
+      put(s"$root/a/${if (i == 0) "k=1" else s"b${i % 3}"}/f$i.$ext", row(i))
+    put(s"$root/a/b0/_x.$ext", row(99))
+    s"$root/*/*/*.$ext"
+  }
+
+  private def inputFiles(df: DataFrame): Set[String] =
+    df.select(input_file_name()).as[String].collect().toSet
+
+  /** `ours` is built with no Spark job and reads what `theirs` (the
+    * `spark.read` equivalent) reads: same schema, rows and files. */
+  private def assertListedOnce(ours: => DataFrame, theirs: => DataFrame,
+                               files: Int): Unit = {
+    val (o, oursJobs) = jobsDuring(ours)
+    val (t, theirJobs) = jobsDuring(theirs)
+    assert(theirJobs > 0, "fixture must be past spark.read's listing-job threshold")
+    assert(oursJobs === 0, "building the scan must start no Spark job")
+    assert(o.schema === t.schema)
+    assert(rendered(o) === rendered(t))
+    assert(inputFiles(o) === inputFiles(t))
+    assert(inputFiles(o).size === files, "the hidden match is not read")
+  }
+
+  test("readJson over a nested glob: spark.read's schema, rows and files, " +
+       "and no listing job") {
+    val glob = nestedFixture("nested_json", "json",
+      i => s"""{"id":$i,"name":"n$i","score":${i * 0.5}}""")
+    assertListedOnce(Sources.readJson(spark, glob, nestedSchema),
+      spark.read.schema(nestedSchema).json(glob), files = 34)
+  }
+
+  test("readCsv over a nested glob: spark.read's schema, rows and files, " +
+       "and no listing job") {
+    val glob = nestedFixture("nested_csv", "csv",
+      i => s"id,name,score\n$i,n$i,${i * 0.5}\n")
+    assertListedOnce(Sources.readCsv(spark, glob, nestedSchema),
+      spark.read.schema(nestedSchema).option("header", "true").csv(glob),
+      files = 34)
+  }
+
+  test("readJson over a partitioned directory types the partition column " +
+       "from the declared schema, as spark.read does") {
+    put(s"$dir/kdir/k=1/x.json", """{"id":1,"name":"a","score":1.0}""")
+    put(s"$dir/kdir/k=02/y.json", """{"id":2,"name":"b","score":2.0}""")
+    val schema = nestedSchema.add("k", StringType)
+    val ours = Sources.readJson(spark, s"$dir/kdir", schema)
+    val theirs = spark.read.schema(schema).json(s"$dir/kdir")
+    assert(ours.schema === theirs.schema)
+    assert(ours.schema("k").dataType === StringType)
+    assert(rendered(ours) === rendered(theirs))
+    assert(ours.filter(col("k") === "02").count() === 1)
+  }
+
+  test("readJson: a glob that matches nothing raises PATH_NOT_FOUND, " +
+       "as spark.read does") {
+    val glob = s"$dir/no_such_dir/*/*.json"
+    val ours = intercept[AnalysisException](
+      Sources.readJson(spark, glob, nestedSchema))
+    val theirs = intercept[AnalysisException](
+      spark.read.schema(nestedSchema).json(glob))
+    assert(ours.getCondition === "PATH_NOT_FOUND")
+    assert(theirs.getCondition === "PATH_NOT_FOUND")
+  }
+
+  test("readJson refuses a streaming file-sink directory") {
+    val e = intercept[IllegalArgumentException](
+      Sources.readJson(spark, sinkLike, nestedSchema))
+    assert(e.getMessage.contains("_spark_metadata"))
+  }
 
   test("JSON-lines round-trip with explicit schema (no inference pass)") {
     Sources.writeJsonLines(sample, s"$dir/json")
@@ -142,12 +250,17 @@ class SourcesSpec extends SparkTestBase {
     assert(Sources.readParquet(spark, s"$dir/pcompact").count() === 3)
   }
 
-  test("compactParquet refuses a streaming file-sink directory") {
-    import spark.implicits._
+  /** A parquet directory holding `_spark_metadata`, the marker of a
+    * streaming file-sink output. */
+  private lazy val sinkLike = {
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/sinklike")
     new java.io.File(s"$dir/sinklike/_spark_metadata").mkdir()
+    s"$dir/sinklike"
+  }
+
+  test("compactParquet refuses a streaming file-sink directory") {
     intercept[IllegalArgumentException] {
-      Sources.compactParquet(spark, s"$dir/sinklike", s"$dir/sinklike2")
+      Sources.compactParquet(spark, sinkLike, s"$dir/sinklike2")
     }
   }
 

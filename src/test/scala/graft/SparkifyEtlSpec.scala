@@ -86,6 +86,46 @@ class SparkifyEtlSpec extends SparkTestBase {
 
   private lazy val out = { SparkifyEtl.run(spark, songJson, logJson, s"$dir/out"); s"$dir/out" }
 
+  private def put(path: String, text: String): Unit = {
+    Files.createDirectories(java.nio.file.Paths.get(path).getParent)
+    Files.writeString(java.nio.file.Paths.get(path), text)
+  }
+
+  // Reference-shaped input (FIXTURES.md §1–2): one song per file under
+  // song_data/A/B/C/ (36 files, past the 32-path listing threshold; 6
+  // artists, every fourth year 0), and one log file per day whose
+  // NextSong rows play those songs exactly (plus a non-matching length,
+  // a Home page and a level change). Returns the reference's two globs.
+  private lazy val globInput = {
+    val root = s"$dir/glob_input"
+    for (i <- 0 until 36) {
+      val a = i % 6
+      put(f"$root/song_data/A/B/C/TRAAA$i%03d.json",
+        s"""{"num_songs":1,"artist_id":"AR$a","artist_latitude":${30.0 + a},""" +
+        s""""artist_location":"City$a","artist_longitude":${-100.0 - a},""" +
+        s""""artist_name":"Artist$a","song_id":"SO$i","title":"Title$i",""" +
+        s""""duration":${120.0 + i * 0.25},"year":${if (i % 4 == 0) 0 else 1990 + i}}""")
+    }
+    for (day <- 1 to 3) {
+      val rows = (0 until 8).map { j =>
+        val i = (day * 7 + j) % 36
+        val user = (day + j) % 5 + 1
+        val page = if (j == 7) "Home" else "NextSong"
+        val length = if (j == 6) 1.5 else 120.0 + i * 0.25
+        s"""{"artist":"Artist${i % 6}","auth":"Logged In","firstName":"F$user",""" +
+        s""""gender":"${if (user % 2 == 0) "M" else "F"}","itemInSession":$j,""" +
+        s""""lastName":"L$user","length":$length,""" +
+        s""""level":"${if (day == 3) "paid" else "free"}","location":"Town$user",""" +
+        s""""method":"PUT","page":"$page","registration":1.54E12,""" +
+        s""""sessionId":${day * 10 + user},"song":"Title$i","status":200,""" +
+        s""""ts":${1541030400000L + day * 86400000L + j * 60000L},""" +
+        s""""userAgent":"UA$user","userId":"$user"}"""
+      }
+      put(s"$root/log_data/2018-11-0$day-events.json", rows.mkString("\n"))
+    }
+    (s"$root/song_data/*/*/*/*.json", s"$root/log_data/*.json")
+  }
+
   test("run refuses to clobber an existing output by default, like the reference") {
     // the reference sets no .mode(...) → Spark's errorifexists default
     // (etl_pipeline.py:113–115); overwrite is an explicit opt-in
@@ -132,6 +172,29 @@ class SparkifyEtlSpec extends SparkTestBase {
     val songplays = declared.last._2
     assert(songplays.count() === 2, "both exact (artist, song, length) " +
       "matches join; the malformed lines join nothing")
+  }
+
+  test("run over the reference's globs writes the five tables the table " +
+       "functions give over spark.read of the same globs") {
+    val (songGlob, logGlob) = globInput
+    SparkifyEtl.run(spark, songGlob, logGlob, s"$dir/glob_out")
+    val song = spark.read.schema(SparkifyEtl.SongSchema).json(songGlob)
+    val log = SparkifyEtl.cleanLogData(
+      spark.read.schema(SparkifyEtl.LogSchema).json(logGlob))
+    assert(song.select(input_file_name()).distinct().count() === 36)
+    val songs = SparkifyEtl.songsTable(song)
+    val artists = SparkifyEtl.artistsTable(song)
+    val expected = Seq("songs" -> songs, "artists" -> artists,
+      "users" -> SparkifyEtl.usersTable(log),
+      "time" -> SparkifyEtl.timeTable(log),
+      "songplays" -> SparkifyEtl.songplaysTable(log, songs, artists))
+    for ((name, want) <- expected) {
+      val got = spark.read.parquet(s"$dir/glob_out/$name")
+        .select(want.columns.map(col).toSeq: _*)
+      assert(rendered(got) === rendered(want), s"$name rows")
+    }
+    assert(spark.read.parquet(s"$dir/glob_out/songplays").count() === 18,
+      "every NextSong row with a matching length joins")
   }
 
   test("songs: one row per song_id, year 0 becomes NULL") {
