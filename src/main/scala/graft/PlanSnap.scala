@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Round-20 optimization evidence: dump `.explain("formatted")` for a
   * named set of queries into plans/r20/<query>_<tag>.txt — the
   * before/after plan artifacts the optimization judge checks claims
-  * against (the full-roster twin is PlanDump → PLANS.md).
+  * against (PlanDump writes the full roster's plan census).
   *
   * Usage: runMain graft.PlanSnap <tag> <q1,q2,...> [sfDir]
   */

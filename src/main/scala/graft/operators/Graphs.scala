@@ -714,9 +714,10 @@ object Graphs {
         .join(visited, Seq("node"), "left_anti")
         .withColumn("dist", lit(h.toLong))
       // lazy, not eager (r19): visited is consumed three times per hop
-      // (frontier filter, anti-join, union) — the lazy checkpoint
-      // dedupes those identically while letting ONE final action drive
-      // all hops instead of paying a blocking driver job per hop
+      // (frontier filter, anti-join, union) and the cut computes it once
+      // for all three. Each hop's cut still runs its input's shuffle
+      // stages when it is made (see OpCaches.cut); only the last stage
+      // of each hop waits for the first action that reads it
       visited = OpCaches.cut(visited.unionByName(next))
       frontier = visited.filter(col("dist") === h)
     }

@@ -38,9 +38,11 @@ class CollectLintSpec extends AnyFunSuite {
     "sources/ManifestTable.scala" -> (3,
       "manifest entries (≈ nBuckets rows), recorded batch ids, and the " +
       "|rules|-row expectations audit"),
-    "SparkEntry.scala" -> (3,
+    "queries/TokenizerQueries.scala" -> (2,
       "stored BPE merge lists (k rows) for the bpe-stored serve " +
-      "queries, plus the logistic trainer's final 4-long weight row " +
+      "queries"),
+    "queries/TextQueries.scala" -> (1,
+      "the logistic trainer's final 4-long weight row " +
       "for the q_logreg_score serve composition"),
     // harness mains, not library surface — but linted anyway so a row
     // collection cannot hide in the entry points either

@@ -46,25 +46,24 @@ class OracleShapeSpec extends SparkTestBase {
       s"${(os -- qs).toSeq.sorted.mkString(", ")}")
   }
 
-  test("no shadowed duplicate keys in the source registries") {
-    // a Map literal silently keeps the LAST binding for a repeated key,
-    // so a name collision makes the earlier query/oracle dead code with
-    // no runtime symptom (found live: two q_histogram registrations).
-    // Count key literals in the SOURCE and pin them to the map sizes:
-    // each name must appear exactly twice — once per registry.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      "UTF-8")
-    val keys = """"(entry|q1_agg|q_[a-z0-9_]+)" ->""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val dupes = keys.groupBy(identity).filter(_._2.size != 2)
-    assert(dupes.isEmpty,
-      s"registry keys not appearing exactly twice (query + oracle) in " +
-      s"source: ${dupes.map { case (k, v) => s"$k×${v.size}" }.toSeq.sorted
-        .mkString(", ")}")
-    assert(keys.size ===
-      SparkEntry.queries.size + SparkEntry.oracleSql.size,
-      "source key literals must match the materialized map sizes — a " +
-      "mismatch means a Map-literal collision swallowed an entry")
+  test("query records: names unique, one query and one oracle per name") {
+    // the registries are maps keyed by name, so a repeated name would
+    // leave one of the two records dead with no runtime symptom (found
+    // live once: two q_histogram registrations)
+    val repeated = SparkEntry.records.groupBy(_.name)
+      .collect { case (n, rs) if rs.size > 1 => n }
+    assert(repeated.isEmpty,
+      s"query names registered more than once: ${repeated.toSeq.sorted}")
+    assert(SparkEntry.queries.size === SparkEntry.records.size)
+    assert(SparkEntry.oracleSql.size === SparkEntry.records.size)
+  }
+
+  test("the registry refuses two records with the same name") {
+    val build: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame = (s, _) => s.range(1).toDF()
+    val a = Query("q_twice", "relational", build, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      Query.byName(Seq(a, a.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("q_twice"))
   }
 }

@@ -2,32 +2,32 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** PLANS.md roster lint (VERDICT r16 item 6): every registered query
-  * must have a committed plan section, and no section may go stale.
-  * This makes the "regenerate PLANS.md" step mechanical — a query
-  * registered after the last `sbt "runMain graft.PlanDump"` fails the
-  * build here until the dump is regenerated, so plan dumps can no
-  * longer lag the registry round over round. Pure file parse — no
-  * Spark session. */
+/** Plan-census roster lint (VERDICT r16 item 6): every registered query
+  * must have a committed row in `plans/census.jsonl`, and no row may go
+  * stale. This makes the "regenerate the census" step mechanical — a
+  * query registered after the last `sbt "runMain graft.PlanDump"` fails
+  * the build here until the census is regenerated, so the plan census
+  * can no longer lag the registry round over round. Pure file parse —
+  * no Spark session. */
 class PlanRosterSpec extends AnyFunSuite {
 
-  test("PLANS.md has a section for every registered query and no " +
-       "stale sections") {
-    val path = java.nio.file.Paths.get("PLANS.md")
+  test("plans/census.jsonl has a row for every registered query and no " +
+       "stale rows") {
+    val path = java.nio.file.Paths.get("plans/census.jsonl")
     assert(java.nio.file.Files.isRegularFile(path),
-      "PLANS.md missing — run `sbt \"runMain graft.PlanDump\"`")
-    val sections = java.nio.file.Files.readString(path).linesIterator
-      .filter(_.startsWith("## "))
-      .map(_.stripPrefix("## ").split(" — ", 2)(0).trim)
+      "plans/census.jsonl missing — run `sbt \"runMain graft.PlanDump\"`")
+    val nameField = """^\{"name": "([^"]+)"""".r.unanchored
+    val rows = java.nio.file.Files.readString(path).linesIterator
+      .collect { case nameField(n) => n }
       .toSet
-    val registered = SparkEntry.queries.keySet + "entry"
-    val missing = (registered -- sections).toSeq.sorted
+    val registered = SparkEntry.queries.keySet
+    val missing = (registered -- rows).toSeq.sorted
     assert(missing.isEmpty,
-      s"registered queries with no PLANS.md section: $missing — " +
+      s"registered queries with no plans/census.jsonl row: $missing — " +
       "regenerate with `sbt \"runMain graft.PlanDump\"`")
-    val stale = (sections -- registered).toSeq.sorted
+    val stale = (rows -- registered).toSeq.sorted
     assert(stale.isEmpty,
-      s"PLANS.md sections for unregistered queries: $stale — " +
+      s"plans/census.jsonl rows for unregistered queries: $stale — " +
       "regenerate with `sbt \"runMain graft.PlanDump\"`")
   }
 }

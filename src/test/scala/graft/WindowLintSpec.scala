@@ -53,7 +53,7 @@ class WindowLintSpec extends AnyFunSuite {
       "unigramEncodeWithVocab piece-id ranking over the |vocab|-row " +
       "trained vocabulary; zipfSlope's higher-count walk over the " +
       "tf-HISTOGRAM (distinct tf values, not tokens)"),
-    "SparkEntry.scala" -> (2,
+    "queries/TokenizerQueries.scala" -> (2,
       "q_encode_tokens and q_span_corrupt vocab rankings, both over " +
       "the post-minDf vocabulary — model-vocabulary-sized " +
       "(Heaps-sublinear in the corpus), stated in the registration " +
