@@ -84,53 +84,56 @@ object SparkEntry {
     s"$indexCacheRoot/$kind-$h"
   }
 
-  /** Rebuild the IVF embedding index (same parameters as
-    * `q_ann_ivf_indexed`) at its cache path, from scratch. */
-  private[graft] def buildIvfCache(s: SparkSession, d: String): String =
+  /** The `kind` index over corpus `d` at its cache path. `write` builds
+    * it from scratch into an emptied directory when `rebuild` is set or
+    * when `last` — the table the build commits last, relative to the
+    * cache directory (`""`: the directory itself) — has no committed
+    * manifest version yet, so a build that failed partway is rebuilt,
+    * never served. */
+  private def indexCache(s: SparkSession, d: String, kind: String,
+                         last: String, rebuild: Boolean)
+                        (write: String => Unit): String =
     this.synchronized {
-      val dir = cacheDirFor(d, "ivf")
-      deleteTree(java.nio.file.Paths.get(dir))
-      val e = t(s, d, "embeddings")
-      val (cents, cells) = operators.Similarity.ivfIndex(e, nlist = 16,
-        iters = 2)
-      operators.Similarity.writeIvfIndex(dir, cents, cells)
-      dir
-    }
-
-  private[graft] def ensureIvfCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "ivf")
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, "cells")))
-        buildIvfCache(s, d)
-      dir
-    }
-
-  /** Standing IVF index over the EVEN-id half of the corpus — the
-    * `q_ann_ivf_append_probe` fixture: the odd half plays the incoming
-    * ingest batch, so the append-probe row times only the recurring
-    * per-batch cost (assign against stored centroids + probe). */
-  private[graft] def ensureIvfHalfCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "ivfhalf")
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, "cells"))) {
+      val dir = cacheDirFor(d, kind)
+      val table = if (last.isEmpty) dir else s"$dir/$last"
+      if (rebuild || graft.sources.ManifestTable.versions(s, table).isEmpty) {
         deleteTree(java.nio.file.Paths.get(dir))
-        val e = t(s, d, "embeddings").filter(col("vec_id") % 2 === 0)
-        val (cents, cells) = operators.Similarity.ivfIndex(e, nlist = 16,
-          iters = 2)
-        operators.Similarity.writeIvfIndex(dir, cents, cells)
+        write(dir)
       }
       dir
     }
 
-  /** Rebuild the standing MEDIA perceptual-signature index over the
+  /** The IVF embedding index, same parameters as `q_ann_ivf_indexed`;
+    * `half` indexes only the EVEN-id half of the corpus — the
+    * `q_ann_ivf_append_probe` fixture: the odd half plays the incoming
+    * ingest batch, so the append-probe row times only the recurring
+    * per-batch cost (assign against stored centroids + probe). */
+  private def ivfCache(s: SparkSession, d: String, half: Boolean,
+                       rebuild: Boolean): String =
+    indexCache(s, d, if (half) "ivfhalf" else "ivf", "cells", rebuild) {
+      dir =>
+        val e = t(s, d, "embeddings")
+        val (cents, cells) = operators.Similarity.ivfIndex(
+          if (half) e.filter(col("vec_id") % 2 === 0) else e,
+          nlist = 16, iters = 2)
+        operators.Similarity.writeIvfIndex(dir, cents, cells)
+    }
+
+  private[graft] def buildIvfCache(s: SparkSession, d: String): String =
+    ivfCache(s, d, half = false, rebuild = true)
+
+  private[graft] def ensureIvfCache(s: SparkSession, d: String): String =
+    ivfCache(s, d, half = false, rebuild = false)
+
+  private[graft] def ensureIvfHalfCache(s: SparkSession, d: String): String =
+    ivfCache(s, d, half = true, rebuild = false)
+
+  /** The standing MEDIA perceptual-signature index over the
     * `q_media_refresh` fixture's corpus slice (doc_id %4 == 0, 8-byte-
-    * periodic patT×4 payloads) as a ManifestTable, from scratch. */
-  private[graft] def buildMediaSigCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "mediasig")
-      deleteTree(java.nio.file.Paths.get(dir))
+    * periodic patT×4 payloads) as a ManifestTable. */
+  private def mediaSigCache(s: SparkSession, d: String,
+                            rebuild: Boolean): String =
+    indexCache(s, d, "mediasig", "", rebuild) { dir =>
       val g = expr("doc_id div 4")
       val corpus = t(s, d, "documents")
         .filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -141,49 +144,35 @@ object SparkEntry {
       graft.sources.ManifestTable.upsertBatch(
         operators.Multimodal.mediaSimhash(corpus), dir, Seq("media_id"),
         nBuckets = 8, targetRowsPerBucket = 1L << 20)
-      dir
     }
+
+  private[graft] def buildMediaSigCache(s: SparkSession, d: String): String =
+    mediaSigCache(s, d, rebuild = true)
 
   private[graft] def ensureMediaSigCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "mediasig")
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, "_manifests")))
-        buildMediaSigCache(s, d)
-      dir
+    mediaSigCache(s, d, rebuild = false)
+
+  /** The PQ embedding index, same parameters as `q_ann_pq` — codebook
+    * training + corpus encode, the amortizable half of the
+    * compressed-scan serve path. */
+  private def pqCache(s: SparkSession, d: String, rebuild: Boolean): String =
+    indexCache(s, d, "pq", "codes", rebuild) { dir =>
+      val (cb, codes) = operators.Similarity.pqIndex(
+        t(s, d, "embeddings"), m = 16, ksub = 16, iters = 2)
+      operators.Similarity.writePqIndex(dir, cb, codes)
     }
 
-  /** Rebuild the PQ embedding index (same parameters as `q_ann_pq`) at
-    * its cache path, from scratch — codebook training + corpus encode,
-    * the amortizable half of the compressed-scan serve path. */
   private[graft] def buildPqCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "pq")
-      deleteTree(java.nio.file.Paths.get(dir))
-      val e = t(s, d, "embeddings")
-      val (cb, codes) = operators.Similarity.pqIndex(e, m = 16, ksub = 16,
-        iters = 2)
-      operators.Similarity.writePqIndex(dir, cb, codes)
-      dir
-    }
+    pqCache(s, d, rebuild = true)
 
   private[graft] def ensurePqCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "pq")
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, "codes")))
-        buildPqCache(s, d)
-      dir
-    }
+    pqCache(s, d, rebuild = false)
 
-  /** Rebuild the standing MinHash signature index over the refresh
-    * fixture's corpus slice (doc_id %4 == 0, text = t<g>×4 — the
-    * `q_incremental_refresh` fixture) as a ManifestTable, from
-    * scratch. */
-  private[graft] def buildSigCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "sig")
-      deleteTree(java.nio.file.Paths.get(dir))
+  /** The standing MinHash signature index over the refresh fixture's
+    * corpus slice (doc_id %4 == 0, text = t<g>×4 — the
+    * `q_incremental_refresh` fixture) as a ManifestTable. */
+  private def sigCache(s: SparkSession, d: String, rebuild: Boolean): String =
+    indexCache(s, d, "sig", "", rebuild) { dir =>
       val g = expr("doc_id div 4")
       val corpus = t(s, d, "documents")
         .filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -192,17 +181,15 @@ object SparkEntry {
             concat(lit("t"), g.cast("string")), 4)).as("text"))
       graft.sources.ManifestTable.upsertBatch(
         operators.Dedup.signatureIndex(corpus, "doc_id", "text"),
-        dir, Seq("doc_id", "band_id"), nBuckets = 8, targetRowsPerBucket = 1L << 20)
-      dir
+        dir, Seq("doc_id", "band_id"), nBuckets = 8,
+        targetRowsPerBucket = 1L << 20)
     }
 
+  private[graft] def buildSigCache(s: SparkSession, d: String): String =
+    sigCache(s, d, rebuild = true)
+
   private[graft] def ensureSigCache(s: SparkSession, d: String): String =
-    this.synchronized {
-      val dir = cacheDirFor(d, "sig")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
-        buildSigCache(s, d)
-      dir
-    }
+    sigCache(s, d, rebuild = false)
 
   /** Flagship query — star-join revenue rollup: lineitem ⋈ orders ⋈
     * customer ⋈ nation ⋈ region, dims broadcast, one shuffle for the

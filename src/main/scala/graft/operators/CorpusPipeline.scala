@@ -206,8 +206,8 @@ object CorpusPipeline {
     * Driver state: the waterfall collects one row per source (the
     * [[Mixing.allocateBudget]] bound — model-state, never row data).
     * The cleaned+pruned table feeds both the planner's size aggregate
-    * and the final sample→pack plan, so it is persisted (registered in
-    * [[OpCaches]]) rather than running the LSH dedup ladder twice. */
+    * and the final sample→pack plan, so it is pinned
+    * ([[OpCaches.pin]]) rather than running the LSH dedup ladder twice. */
   def prepareWithBudget(docs: DataFrame, weights: Map[String, Long],
                         budget: Long, packBudget: Long,
                         maxEpochs: Double = 1.0,
@@ -229,9 +229,8 @@ object CorpusPipeline {
       .join(docs.select(col(idCol), col(sourceCol)), Seq(idCol))
     val pruned = TextAnalysis.qualityPrune(sourced, keepFrac,
       sourceCol, idCol, textCol)
-    val sized = OpCaches.register(pruned
-      .withColumn("__len", length(col(textCol)).cast("long"))
-      .persist())
+    val sized = OpCaches.pin(pruned
+      .withColumn("__len", length(col(textCol)).cast("long")))
     val plan = Mixing.allocateBudget(sized, weights, budget, maxEpochs,
       sourceCol, "__len")
     val rates = plan.select(col(sourceCol), col("epochs"))

@@ -507,16 +507,6 @@ object Dedup {
   def minhashSignature(shingles: Column, k: Int): Column =
     VectorExprs.minhashSig(shingles, k)
 
-  /** Portable higher-order-function formulation of [[minhashSignature]]
-    * (k independent hashes as xxhash64(seed_i, shingle)). Kept as the
-    * no-custom-expression fallback and for plan-shape comparison in specs;
-    * hash values differ from the native path (different seed derivation)
-    * but the MinHash estimator properties are identical. */
-  def minhashSignatureHof(shingles: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      seed => array_min(transform(shingles, s => xxhash64(seed, s))))
-
   /** Banded MinHash signature table — the shared front half of every LSH
     * near-dup plan here ([[minhashNearDups]], [[dedupAgainstCorpus]]).
     * One row per (document, band):
@@ -602,9 +592,8 @@ object Dedup {
     // exchange reuse (VERDICT r5) — caching makes the shingle/minhash
     // derivation run once, the materialize-the-signature-table-once
     // pattern a production pipeline uses across a whole dedup run
-    val banded = OpCaches.register(
-      bandedSignatures(df, idCol, textCol, shingleN, numHashes, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val banded = OpCaches.pin(
+      bandedSignatures(df, idCol, textCol, shingleN, numHashes, bands))
     // Bucket-size bound on the LEFT join side only (see scaladoc): rank
     // within the (band, hash) bucket, keep the first bucketCap docs. The
     // rn<=cap filter gets the WindowGroupLimit pushdown.
@@ -1230,9 +1219,8 @@ object Dedup {
       df.select(col(idCol).as("doc_id"), col(textCol),
         blockKey.as("__blk"), sortKey.as("__srt")),
       col("doc_id"))
-    val sh = OpCaches.register(base
-      .select(col("doc_id"), shingleCol(col(textCol), shingleN).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sh = OpCaches.pin(base
+      .select(col("doc_id"), shingleCol(col(textCol), shingleN).as("sh")))
     val w = Window.partitionBy(col("__blk"))
       .orderBy(col("__srt"), col("doc_id"))
     val cand = base.select(col("doc_id"), col("__blk"), col("__srt"))
@@ -1311,8 +1299,8 @@ object Dedup {
     * prefix table likewise feeds both sides of the candidate self-join
     * and is persisted rather than left to exchange reuse. Both caches
     * stay in Spark's CacheManager until explicitly unpersisted (the
-    * ContextCleaner never evicts cached plans) — they are registered
-    * with [[OpCaches]]; call `OpCaches.release()` after the consuming
+    * ContextCleaner never evicts cached plans) — they are pinned with
+    * [[OpCaches.pin]]; call `OpCaches.release()` after the consuming
     * action. A production pipeline that runs several dedup passes over
     * one corpus should materialize the shingle table itself and reuse
     * it across operators.
@@ -1321,11 +1309,10 @@ object Dedup {
                       threshold: Double, shingleN: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       "threshold must be in (0, 1]")
-    val sh = OpCaches.register(
+    val sh = OpCaches.pin(
       Ops.spread(df.select(col(idCol).as("doc_id"), col(textCol)),
                  col("doc_id"))
-        .select(col("doc_id"), shingleCol(col(textCol), shingleN).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), shingleCol(col(textCol), shingleN).as("sh")))
     val toks = sh.select(col("doc_id"), size(col("sh")).as("sz"),
                          explode(col("sh")).as("tok"))
     val dfCounts = toks.groupBy("tok").agg(count(lit(1)).as("tok_df"))
@@ -1334,11 +1321,10 @@ object Dedup {
       .orderBy(col("tok_df"), col("tok"))
     val prefixLen = col("sz") -
       ceil(col("sz") * threshold - lit(1e-9)).cast("int") + 1
-    val prefix = OpCaches.register(ordered
+    val prefix = OpCaches.pin(ordered
       .withColumn("__pos", row_number().over(pw))
       .filter(col("__pos") <= prefixLen)
-      .select(col("doc_id"), col("sz"), col("__pos"), col("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col("doc_id"), col("sz"), col("__pos"), col("tok")))
     // α = ⌈t/(1+t)·(szA+szB)⌉: the minimum overlap J ≥ t requires.
     val alpha = (col("pa.sz") + col("pb.sz")) * (threshold / (1.0 + threshold)) -
       lit(1e-9)
@@ -1404,7 +1390,7 @@ object Dedup {
     * blocks, so ids are frozen across the plan's consumers.
     *
     * The weight table feeds prefix generation and both verify sides;
-    * persisted via [[OpCaches]] like the Jaccard twin. */
+    * pinned via [[OpCaches.pin]] like the Jaccard twin. */
   def allPairsCosine(df: DataFrame, idCol: String, textCol: String,
                      threshold: Double, shingleN: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -1428,10 +1414,9 @@ object Dedup {
       .select(col("doc_id"), col("tid"), col("tok_df"), col("tf")))
     val nrm = tf.groupBy("doc_id")
       .agg(sqrt(sum(col("tf") * col("tf")).cast("double")).as("nrm"))
-    val wts = OpCaches.register(tf.join(nrm, "doc_id")
+    val wts = OpCaches.pin(tf.join(nrm, "doc_id")
       .select(col("doc_id"), col("tid"), col("tok_df"),
-        (col("tf").cast("double") / col("nrm")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        (col("tf").cast("double") / col("nrm")).as("w")))
     val pw = Window.partitionBy(col("doc_id"))
       .orderBy(col("tok_df"), col("tid"))
     // suffix norm² INCLUDING the current position: a position stays in
@@ -1447,13 +1432,12 @@ object Dedup {
       pw.rowsBetween(Window.unboundedPreceding, -1))
     // each prefix row carries rem = ‖suffix from this position‖ for the
     // POSITIONAL bound below (PPJoin's positional-filter analog)
-    val prefix = OpCaches.register(wts
+    val prefix = OpCaches.pin(wts
       .withColumn("__head", coalesce(headBefore, lit(0.0)))
       .filter(lit(1.0) - col("__head") >=
         lit(threshold * threshold) - lit(1e-6))
       .select(col("doc_id"), col("tid"),
-        sqrt(greatest(lit(1.0) - col("__head"), lit(0.0))).as("__rem"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        sqrt(greatest(lit(1.0) - col("__head"), lit(0.0))).as("__rem")))
     // POSITIONAL cut: every shared term of a qualifying pair sits at or
     // after the globally-smallest shared term t* in both docs, so by
     // Cauchy–Schwarz cos ≤ rem_a(pos of t* in a) · rem_b(pos in b) —
@@ -1489,10 +1473,9 @@ object Dedup {
     // bit-exactly in long arithmetic (see its doc). An interpreted
     // map-lookup fold was measured SLOWER than the join (6.5 s vs
     // 5.1 s); the native merge wins because it runs inside the stage.
-    val docvecs = OpCaches.register(wts.groupBy("doc_id")
+    val docvecs = OpCaches.pin(wts.groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("tid"), col("w"))))
-        .as("tv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .as("tv")))
     cand
       .join(docvecs.select(col("doc_id").as("doc_a"), col("tv").as("ta")),
         "doc_a")
@@ -1543,11 +1526,10 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       "threshold must be in (0, 1]")
     require(probeDfCap >= 1, "probeDfCap must be positive")
-    val sh = OpCaches.register(
+    val sh = OpCaches.pin(
       Ops.spread(df.select(col(idCol).as("doc_id"), col(textCol)),
                  col("doc_id"))
-        .select(col("doc_id"), shingleCol(col(textCol), shingleN).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), shingleCol(col(textCol), shingleN).as("sh")))
     val toks = sh.select(col("doc_id"), size(col("sh")).as("sz"),
                          explode(col("sh")).as("tok"))
     val dfCounts = toks.groupBy("tok").agg(count(lit(1)).as("tok_df"))

@@ -42,12 +42,6 @@ object EventOps {
       .drop("__sid")
   }
 
-  /** Extract a scalar from the JSON `props` column (E5). get_json_object
-    * is evaluated natively per row — no parse-to-struct materialization. */
-  def extractProp(events: DataFrame, path: String,
-                  as: String = "prop"): DataFrame =
-    events.withColumn(as, get_json_object(col("props"), path))
-
   /** Batch event-time tumbling window aggregation (E6): count + sum(value)
     * per (window, event_type). One shuffle on the composite key; partial
     * aggregation happens map-side. */
@@ -1396,13 +1390,13 @@ object EventOps {
     val ps = (1 until nTiles).map(_.toDouble / nTiles)
     def bs(c: Column) = percentile(c, array(ps.map(lit(_)): _*))
     // the per-user aggregate feeds BOTH the boundary aggregate and the
-    // scoring join — persist it (OpCaches-released per query) or the
+    // scoring join — pin it (OpCaches-released per query) or the
     // event scan + user shuffle runs twice
-    val users = OpCaches.register(events.groupBy(col(userCol))
+    val users = OpCaches.pin(events.groupBy(col(userCol))
       .agg(max(unix_micros(col(tsCol))).as("__r"),
            count(lit(1)).as("__f"),
            sum(col(valueCol).cast(DecimalType(18, 6))).cast("double")
-             .as("__m")).persist())
+             .as("__m")))
     val bounds = users.agg(bs(col("__r")).as("__rb"),
       bs(col("__f").cast("double")).as("__fb"), bs(col("__m")).as("__mb"))
     def score(v: Column, b: String): Column =

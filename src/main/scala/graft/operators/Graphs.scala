@@ -265,11 +265,10 @@ object Graphs {
     require(iterations >= 1, "iterations must be >= 1")
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
                           col(dstCol).cast("long").as("dst"))
-    val und = OpCaches.register(
+    val und = OpCaches.pin(
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst"))
-        .distinct()
-        .persist())
+        .distinct())
     var labels = und.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     for (i <- 1 to iterations) {
@@ -512,17 +511,16 @@ object Graphs {
     * array-carrying rows — measured 15.8 → ~4 s. Exchanges: the
     * adjacency groupBy and two edge-key joins (arrays duplicated per
     * incident edge — O(wedge) BYTES, the honest lower bound for exact
-    * counting), one aggregate. The canonical edge table is persisted
+    * counting), one aggregate. The canonical edge table is pinned
     * (release via [[OpCaches.release]]) since degrees and orientation
     * both read it. */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
-    val e = OpCaches.register(edges
+    val e = OpCaches.pin(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
               greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist())
+      .distinct())
     // deg feeds three consumers (both orientation joins + the final
     // node list), dir three (adjacency build + both sides of the
     // pairing join), adj two — without materialization the orientation

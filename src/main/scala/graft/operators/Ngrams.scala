@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExprs
@@ -538,6 +537,31 @@ object Ngrams {
     .groupBy(col("p.l").as("l"), col("p.r").as("r"))
     .agg(sum(col("c")).as("cnt"))
 
+  /** Session memo over [[bpeTrainState]] ([[OpCaches.memo]]): the four
+    * published BPE artifacts (merge table, segmentation, encoded
+    * corpus, fertility report) all ride the SAME trained tokenizer, and
+    * a production tokenizer trains once — without the memo each
+    * artifact re-ran the full merge loop. Keyed by the training corpus
+    * plus (numMerges, textCol). The memoized `words` frame stays
+    * persisted (vocabulary-sized, bounded model state) until the memo
+    * drops it; a cache miss after an external unpersist merely
+    * retrains. Cleared by `OpCaches.resetQueryState` — between bench
+    * queries (Bench keeps the memo only within one query's best-of-N so
+    * each BPE query's record measures its own training), at the end of
+    * a Verify run, and in spec teardown. */
+  private val bpeMemo =
+    OpCaches.memo[(DataFrame, Seq[(Long, String, String, String, Long)])](
+      _._1.unpersist())
+
+  private def bpeTrainCached(docs: DataFrame, numMerges: Int,
+                             textCol: String)
+      : (DataFrame, Seq[(Long, String, String, String, Long)]) =
+    bpeMemo(docs, numMerges, textCol)(
+      bpeTrainState(docs, numMerges, textCol))
+
+  /** Unpersist and drop every memoized BPE training state. */
+  private[graft] def clearBpeCache(): Unit = bpeMemo.clear()
+
   /** Shared BPE training loop: returns the final (w, syms, c) symbol
     * state (persisted — [[bpeMemo]] owns release) plus the merge list.
     * Pair counts are DELTA-maintained (see [[bpeTrain]] scale notes):
@@ -547,62 +571,6 @@ object Ngrams {
     * arithmetic, no drift) to a from-scratch re-count, so the argmax —
     * and therefore the merge list — is bit-identical to the naive
     * loop the DuckDB oracle unrolls. */
-  /** Session-scoped memo over [[bpeTrainState]]: the four published BPE
-    * artifacts (merge table, segmentation, encoded corpus, fertility
-    * report) all ride the SAME trained tokenizer, and a production
-    * tokenizer trains once — without the memo each artifact re-ran the
-    * full merge loop. Keyed by (session, canonicalized train plan,
-    * numMerges, textCol): canonicalization normalizes expression ids, so
-    * two independent reads of the same corpus path hit the same entry,
-    * while any change to corpus, merge count, or column misses. The
-    * cached `words` frame stays persisted (vocabulary-sized — bounded
-    * model state) and is registered session-scoped with [[OpCaches]],
-    * so `OpCaches.registered` accounts for it while the per-query
-    * `OpCaches.release` deliberately does not free it; a cache miss
-    * after an external unpersist merely retrains. The memo is BOUNDED:
-    * at most [[bpeMemoCap]] distinct training configs are retained,
-    * with oldest-first eviction unpersisting the evicted state, so a
-    * long-lived session cycling many tokenizer configs/corpora cannot
-    * accumulate persisted executor memory. Released in full by
-    * [[clearBpeCache]] — called between bench queries (Bench keeps the
-    * memo only within one query's best-of-N so each BPE query's record
-    * measures its own training), at the end of a Verify run, and from
-    * SparkTestBase's afterAll teardown. */
-  private val bpeMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (SparkSession, LogicalPlan, Int, String),
-    (DataFrame, Seq[(Long, String, String, String, Long)])]
-
-  /** Max distinct (session, plan, merges, col) training states retained
-    * at once; one entry is vocabulary-sized. */
-  private val bpeMemoCap = 4
-
-  private def bpeTrainCached(docs: DataFrame, numMerges: Int,
-                             textCol: String)
-      : (DataFrame, Seq[(Long, String, String, String, Long)]) =
-    bpeMemo.synchronized {
-      val key = (docs.sparkSession,
-        docs.queryExecution.analyzed.canonicalized, numMerges, textCol)
-      bpeMemo.getOrElse(key, {
-        while (bpeMemo.size >= bpeMemoCap) {
-          val (oldKey, (oldWords, _)) = bpeMemo.head
-          OpCaches.deregisterSession(oldWords)
-          bpeMemo.remove(oldKey)
-        }
-        val state = bpeTrainState(docs, numMerges, textCol)
-        OpCaches.registerSession(state._1)
-        bpeMemo.put(key, state)
-        state
-      })
-    }
-
-  /** Unpersist and drop every memoized BPE training state. */
-  private[graft] def clearBpeCache(): Unit = bpeMemo.synchronized {
-    bpeMemo.values.foreach { case (words, _) =>
-      OpCaches.deregisterSession(words)
-    }
-    bpeMemo.clear()
-  }
-
   private def bpeTrainState(docs: DataFrame, numMerges: Int,
                             textCol: String)
       : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
@@ -699,17 +667,15 @@ object Ngrams {
   // -------------------------------------------------------------------
 
   /** (w, c) word-frequency table — the corpus's ONLY appearance in the
-    * unigram trainer (everything after is vocabulary-sized). Persisted
-    * via [[OpCaches]]: every EM round's E-step re-reads it. */
+    * unigram trainer (everything after is vocabulary-sized). Pinned
+    * via [[OpCaches.pin]]: every EM round's E-step (and the seed's
+    * substring explode) re-reads it, and without the pin each re-ran
+    * the corpus tokenize+count (r19). */
   private def unigramWordCounts(docs: DataFrame, textCol: String): DataFrame =
-    OpCaches.register(
+    OpCaches.pin(
       docs.select(explode(toks(col(textCol))).as("w"))
         .filter(length(col("w")) >= 1)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-        // r19: the .persist() this doc block always claimed was
-        // missing — without it every EM round's E-step (and the seed's
-        // substring explode) re-ran the corpus tokenize+count
-        .persist())
+        .groupBy("w").agg(count(lit(1)).as("c")))
 
   /** Seed vocabulary: every single character (never pruned — they keep
     * all words segmentable, SentencePiece's coverage set) plus the
@@ -853,58 +819,31 @@ object Ngrams {
     * Viterbi projection over distinct words, a piece-count aggregate,
     * and a model-sized TakeOrdered prune (per-task top-k heaps, no
     * single-partition window stage anywhere in seed or prune). Each
-    * round's vocabulary is persisted ([[OpCaches]]) because round r+1
+    * round's vocabulary is cut ([[OpCaches.cut]]) because round r+1
     * reads it twice (score map + surviving-singles join). */
   def unigramTrain(docs: DataFrame, vocabSize: Int, maxPieceLen: Int = 4,
                    rounds: Int = 2, seedSize: Int = 40,
                    textCol: String = "text"): DataFrame = {
     require(vocabSize >= 1 && maxPieceLen >= 1 && rounds >= 1 &&
       seedSize >= 0)
-    uniMemo.synchronized {
-      val key = (docs.sparkSession,
-        docs.queryExecution.analyzed.canonicalized,
-        vocabSize, maxPieceLen, rounds, seedSize, textCol)
-      uniMemo.getOrElse(key, {
-        while (uniMemo.size >= uniMemoCap) {
-          val (oldKey, oldModel) = uniMemo.head
-          OpCaches.deregisterSession(oldModel)
-          uniMemo.remove(oldKey)
-        }
-        val model = unigramTrainModel(docs, vocabSize, maxPieceLen,
-          rounds, seedSize, textCol).persist()
-        OpCaches.registerSession(model)
-        uniMemo.put(key, model)
-        model
-      })
-    }
+    uniMemo(docs, vocabSize, maxPieceLen, rounds, seedSize, textCol)(
+      unigramTrainModel(docs, vocabSize, maxPieceLen, rounds, seedSize,
+        textCol).persist())
   }
 
-  /** Session-scoped memo over [[unigramTrainModel]] — the r9 BPE memo
-    * pattern ([[bpeMemo]]) applied to the unigram family: the four
-    * published artifacts (vocabulary, segmentation, stored round trip,
-    * encoded corpus) all ride the SAME trained model, and a production
-    * tokenizer trains once. Keyed by (session, canonicalized corpus
-    * plan, vocabSize, maxPieceLen, rounds, seedSize, textCol);
-    * canonicalization normalizes expression ids, so two reads of the
-    * same corpus path hit, while any corpus/hyperparameter change
-    * misses. The memoized frame is the PERSISTED model-sized
-    * (piece, cnt, logp_micro) table, [[OpCaches.registerSession]]-
-    * tracked so accounting is uniform while per-query release leaves
-    * it alone; BOUNDED at [[uniMemoCap]] entries with oldest-first
-    * eviction. Released in full by [[clearUnigramCache]] — called
-    * between bench queries (each q_unigram_* row measures its own
-    * training), at the end of a Verify run, and in spec teardown. */
-  private val uniMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (SparkSession, LogicalPlan, Int, Int, Int, Int, String), DataFrame]
-
-  /** Max distinct training configs retained; one entry is model-sized. */
-  private val uniMemoCap = 4
+  /** Session memo over [[unigramTrainModel]] — the [[bpeMemo]] pattern
+    * applied to the unigram family: the four published artifacts
+    * (vocabulary, segmentation, stored round trip, encoded corpus) all
+    * ride the SAME trained model, and a production tokenizer trains
+    * once. Keyed by the corpus plus (vocabSize, maxPieceLen, rounds,
+    * seedSize, textCol). The memoized frame is the PERSISTED
+    * model-sized (piece, cnt, logp_micro) table, unpersisted when the
+    * memo drops it. Cleared by `OpCaches.resetQueryState`, so each
+    * q_unigram_* bench row measures its own training. */
+  private val uniMemo = OpCaches.memo[DataFrame](_.unpersist())
 
   /** Unpersist and drop every memoized unigram model. */
-  private[graft] def clearUnigramCache(): Unit = uniMemo.synchronized {
-    uniMemo.values.foreach(OpCaches.deregisterSession)
-    uniMemo.clear()
-  }
+  private[graft] def clearUnigramCache(): Unit = uniMemo.clear()
 
   private def unigramTrainModel(docs: DataFrame, vocabSize: Int,
                                 maxPieceLen: Int, rounds: Int,
@@ -1073,10 +1012,9 @@ object Ngrams {
                         quantizeDecimals: Int = 9): DataFrame = {
     val toksT = docs.select(col(idCol).as("doc_id"), isTarget.as("__t"),
       explode(toks(col(textCol))).as("tok"))
-    val model = OpCaches.register(toksT.groupBy("tok")
+    val model = OpCaches.pin(toksT.groupBy("tok")
       .agg(count(lit(1)).as("c_r"),
-        sum(when(col("__t"), 1L).otherwise(0L)).as("c_t"))
-      .persist())
+        sum(when(col("__t"), 1L).otherwise(0L)).as("c_t")))
     val totals = model.agg(sum(col("c_r")).as("n_r"),
       sum(col("c_t")).as("n_t"), count(lit(1)).as("v"))
     val delta = model.crossJoin(broadcast(totals))
@@ -1120,12 +1058,11 @@ object Ngrams {
   def collocations(docs: DataFrame, minCount: Long = 5L,
                    textCol: String = "text",
                    quantizeDecimals: Int = 9): DataFrame = {
-    val model = OpCaches.register(docs
+    val model = OpCaches.pin(docs
       .select(explode(ngramArray(col(textCol), 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("c_ab"))
       .select(split(col("bg"), " ").getItem(0).as("w1"),
-        split(col("bg"), " ").getItem(1).as("w2"), col("c_ab"))
-      .persist())
+        split(col("bg"), " ").getItem(1).as("w2"), col("c_ab")))
     val left = model.groupBy("w1").agg(sum("c_ab").as("c_left"))
     val right = model.groupBy("w2").agg(sum("c_ab").as("c_right"))
     val total = model.agg(sum("c_ab").as("n_total"))
@@ -1151,12 +1088,11 @@ object Ngrams {
     * contribute 0 (the O→0 limit). */
   def logLikelihoodCollocations(docs: DataFrame, minCount: Long = 5L,
                                 textCol: String = "text"): DataFrame = {
-    val model = OpCaches.register(docs
+    val model = OpCaches.pin(docs
       .select(explode(ngramArray(col(textCol), 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("c_ab"))
       .select(split(col("bg"), " ").getItem(0).as("w1"),
-        split(col("bg"), " ").getItem(1).as("w2"), col("c_ab"))
-      .persist())
+        split(col("bg"), " ").getItem(1).as("w2"), col("c_ab")))
     val left = model.groupBy("w1").agg(sum("c_ab").as("c_left"))
     val right = model.groupBy("w2").agg(sum("c_ab").as("c_right"))
     val total = model.agg(sum("c_ab").as("n_total"))
@@ -1239,11 +1175,10 @@ object Ngrams {
     * engine-reproducible bit-for-bit. */
   def sourceOverlap(docs: DataFrame, groupCol: String = "source",
                     textCol: String = "text", n: Int = 3): DataFrame = {
-    val sh = OpCaches.register(docs
+    val sh = OpCaches.pin(docs
       .select(col(groupCol).as("__g"),
         explode(ngramArray(col(textCol), n)).as("__sh"))
-      .distinct()
-      .persist())
+      .distinct())
     val sz = sh.groupBy(col("__g")).agg(count(lit(1)).as("__sz"))
     val inter = sh.as("a")
       .join(sh.as("b"),
@@ -1286,10 +1221,9 @@ object Ngrams {
   def sourceDivergence(docs: DataFrame, groupCol: String = "source",
                        textCol: String = "text"): DataFrame = {
     val L2 = lit(693147181L) // round(ln 2 · 1e9)
-    val cnt = OpCaches.register(docs
+    val cnt = OpCaches.pin(docs
       .select(col(groupCol).as("g"), explode(toks(col(textCol))).as("tok"))
-      .groupBy(col("g"), col("tok")).agg(count(lit(1)).as("c"))
-      .persist())
+      .groupBy(col("g"), col("tok")).agg(count(lit(1)).as("c")))
     val tot = cnt.groupBy(col("g")).agg(sum(col("c")).as("n"))
     val sided = cnt.join(tot, "g")
     val a = sided.select(col("g").as("ga"), col("tok"),

@@ -1,42 +1,59 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Registry of DataFrames persisted INSIDE graft operators.
+/** The one owner of operator-held state: every intermediate a graft
+  * operator keeps alive beyond one plan node is held here, with one of
+  * three lifetimes.
   *
-  * Several operators persist an intermediate that feeds multiple
-  * consumers of the returned plan (e.g. [[Dedup.allPairsJaccard]]'s
-  * shingle table, [[Dedup.minhashNearDups]]'s banded signature table).
+  * ==Lineage cuts: [[cut]] / [[cutNow]]==
+  *
+  * Operators that materialize a multi-consumer intermediate as a plan
+  * leaf (Graphs' rank/score loops, Ngrams' EM vocabulary, Dedup's CC
+  * labels and audit truth tables, ManifestTable's bucketed commit
+  * batch, …) cut it to a local checkpoint: lazy ([[cut]]) or eager
+  * ([[cutNow]]). The ContextCleaner reclaims the blocks when the RDD is
+  * collected. Both assume a single-JVM or loss-tolerant deployment; the
+  * durability trade-off and the escalation menu are in [[cut]]'s doc,
+  * and changing that choice is an edit to these two functions, not to
+  * their callers.
+  *
+  * ==Per-query pins: [[pin]] / [[release]]==
+  *
+  * An intermediate that feeds several consumers of the returned plan
+  * (e.g. [[Dedup.allPairsJaccard]]'s shingle table,
+  * [[Dedup.minhashNearDups]]' banded signature table) is persisted at
+  * the session's `spark.sql.defaultCacheStorageLevel` through [[pin]].
   * The persist is load-bearing — without it the dominant per-row work
   * runs once per consumer — but Spark's CacheManager holds such entries
   * until an explicit `unpersist`: the ContextCleaner does NOT release
-  * them when the returned DataFrame goes out of scope. A long-lived
-  * session that invokes these operators over many different inputs
-  * would therefore accumulate executor memory/disk without bound.
+  * them when the returned DataFrame goes out of scope. So every pin is
+  * tracked here until [[release]], which the pipeline calls after the
+  * consuming action(s) (re-running the returned plan afterwards is
+  * still correct — just uncached). Identical re-invocations before a
+  * release share one CacheManager entry, which keys by canonicalized
+  * plan.
   *
-  * Every operator-internal `persist` is registered here; call
-  * [[release]] after the consuming action(s) when the pipeline is done
-  * with the operator's output (re-running the returned plan afterwards
-  * is still correct — just uncached). Identical re-invocations before a
-  * release are harmless: the CacheManager keys entries by canonicalized
-  * plan, so they share one entry rather than stacking copies.
+  * ==Session memos: [[memo]]==
   *
-  * ==Lineage cuts==
+  * Model state an operator reuses ACROSS queries (the BPE and unigram
+  * training states, the stored PQ codebook) lives in a [[Memo]]: keyed
+  * by (session, canonicalized input plan, parameters), at most
+  * [[MemoCap]] entries, oldest evicted first, each value freed as it
+  * drops. [[release]] leaves memos alone; [[resetQueryState]] clears
+  * them.
   *
-  * Operators that materialize a multi-consumer intermediate as a plan
-  * leaf instead of a persist (Graphs' rank/score loops, Ngrams' EM
-  * vocabulary, Dedup's CC labels and audit truth tables, ManifestTable's
-  * bucketed commit batch, …) do it through [[cut]] (lazy) or [[cutNow]]
-  * (eager), the one place the engine decides HOW an intermediate is
-  * materialized. Both cut to non-replicated local checkpoints, which
-  * assumes a single-JVM or loss-tolerant deployment; the durability
-  * trade-off and the escalation menu are in [[cut]]'s doc, and changing
-  * that choice is an edit to these two functions, not to their callers.
+  * A persist or cache outside these (a loop's scoped persist/unpersist
+  * pair, a stream's per-batch cache, the ETL's fan-out input) is listed
+  * with its reason in `PersistLintSpec`.
   */
 object OpCaches {
   private val frames = scala.collection.mutable.ListBuffer.empty[DataFrame]
-  private val sessionFrames =
-    scala.collection.mutable.ListBuffer.empty[DataFrame]
+  private val memos = scala.collection.mutable.ListBuffer.empty[Memo[_]]
+
+  /** Most entries one [[Memo]] retains; one entry is model-sized. */
+  private[graft] val MemoCap = 4
 
   /** Cut `df`'s lineage into a LAZY plan leaf
     * (`localCheckpoint(eager = false)`): computed once and shared by
@@ -50,7 +67,7 @@ object OpCaches {
     * columnar-cache InMemoryRelation defeats (measured in
     * [[Graphs.pageRankWeighted]]: 1.4 s checkpoint vs 14.9 s persist).
     * ContextCleaner reclaims the blocks when the RDD is collected, so
-    * cuts need no [[register]].
+    * cuts need no [[release]].
     *
     * With keys `by`, the table is first hash-repartitioned on them to
     * `defaultParallelism` partitions (r20): AQE rightly coalesces a
@@ -96,48 +113,76 @@ object OpCaches {
   private[graft] def cutNow(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
-  /** Track an operator-persisted frame for later [[release]]. Strongly
-    * referenced on purpose: the returned plan does NOT keep the
-    * intermediate's Dataset wrapper alive, and the CacheManager keeps
-    * the cached DATA alive regardless of the wrapper — a weak ref here
-    * would let GC collect the only handle that can still unpersist the
-    * entry. The wrapper itself is a few hundred bytes; the registry is
-    * bounded by release() calls, not by data size. */
-  private[graft] def register(df: DataFrame): DataFrame = synchronized {
-    frames += df
+  /** Persist `df` at the session's default storage level and hold it
+    * until the next [[release]]. Strongly referenced on purpose: the
+    * returned plan does NOT keep the intermediate's Dataset wrapper
+    * alive, and the CacheManager keeps the cached DATA alive regardless
+    * of the wrapper — a weak ref here would let GC collect the only
+    * handle that can still unpersist the entry. The wrapper itself is a
+    * few hundred bytes; the registry is bounded by release() calls, not
+    * by data size. */
+  private[graft] def pin(df: DataFrame): DataFrame = {
+    df.persist()
+    synchronized { frames += df }
     df
   }
 
-  /** Track a SESSION-scoped persisted frame — model state an operator
-    * memoizes across queries (e.g. [[Ngrams]]' BPE training memo).
-    * Counted by [[registered]] so the accounting is uniform, but
-    * deliberately NOT freed by the per-query [[release]]: the owner
-    * bounds and evicts its own entries via [[deregisterSession]] (and a
-    * full teardown — spec afterAll, end of Verify — clears the owner's
-    * memo, which deregisters everything). */
-  private[graft] def registerSession(df: DataFrame): DataFrame =
-    synchronized {
-      sessionFrames += df
-      df
-    }
+  /** A bounded session memo: [[apply]] computes a value once per
+    * (session, canonicalized plan of `df`, params) — canonicalization
+    * normalizes expression ids, so two independent reads of the same
+    * source hit the same entry, while any change of input or params
+    * misses. At most [[MemoCap]] entries are kept; a new key past the
+    * cap evicts the oldest, and every dropped value goes through `free`
+    * (a failing free — e.g. a stopped session — is ignored). Computing
+    * holds the memo's lock, so concurrent callers train one config
+    * once. */
+  final class Memo[V] private[OpCaches] (free: V => Unit) {
+    private val entries = scala.collection.mutable.LinkedHashMap
+      .empty[(SparkSession, LogicalPlan, Seq[Any]), V]
 
-  /** Unpersist and stop tracking one session-scoped frame (memo
-    * eviction or full memo clear). Reference-identity match: the owner
-    * hands back the exact wrapper it registered. */
-  private[graft] def deregisterSession(df: DataFrame): Unit =
-    synchronized {
-      try df.unpersist()
-      catch { case _: Throwable => () } // stopped session: nothing to free
-      val i = sessionFrames.indexWhere(_ eq df)
-      if (i >= 0) sessionFrames.remove(i)
-    }
+    def apply(df: DataFrame, params: Any*)(compute: => V): V =
+      synchronized {
+        val key =
+          (df.sparkSession, df.queryExecution.analyzed.canonicalized, params)
+        entries.getOrElse(key, {
+          while (entries.size >= MemoCap) drop(entries.head._1)
+          val v = compute
+          entries.put(key, v)
+          v
+        })
+      }
 
-  /** Number of registered frames awaiting release, per-query AND
-    * session-scoped (test/observability hook). */
-  def registered: Int = synchronized { frames.size + sessionFrames.size }
+    /** Free and drop every entry. */
+    def clear(): Unit = synchronized { entries.keys.toList.foreach(drop) }
 
-  /** Unpersist every PER-QUERY frame an operator registered since the
-    * last release; session-scoped frames (bounded memoized model state)
+    def size: Int = synchronized { entries.size }
+
+    private def drop(key: (SparkSession, LogicalPlan, Seq[Any])): Unit =
+      entries.remove(key).foreach { v =>
+        try free(v)
+        catch { case _: Throwable => () } // stopped session: nothing to free
+      }
+  }
+
+  /** A new [[Memo]] whose entries [[registered]] counts and
+    * [[resetQueryState]] clears. */
+  private[graft] def memo[V](free: V => Unit): Memo[V] = {
+    val m = new Memo(free)
+    synchronized { memos += m }
+    m
+  }
+
+  /** Memos are read outside OpCaches' lock: a memo computing an entry
+    * holds its own lock and may [[pin]], so taking them in the other
+    * order could deadlock. */
+  private def allMemos: List[Memo[_]] = synchronized { memos.toList }
+
+  /** Pinned frames awaiting [[release]] plus the entries of every memo
+    * (test/observability hook). */
+  def registered: Int =
+    synchronized { frames.size } + allMemos.map(_.size).sum
+
+  /** Unpersist every frame pinned since the last release; memo entries
     * survive by design. Non-blocking by default, matching
     * `Dataset.unpersist()`. */
   def release(blocking: Boolean = false): Unit = synchronized {
@@ -149,15 +194,14 @@ object OpCaches {
   }
 
   /** Reset everything one query can leave behind for the next: the
-    * per-query frames ([[release]], blocking) AND the session-scoped
-    * BPE and unigram training memos. Harnesses that time or profile
-    * queries one by one call this between queries — without the memo
-    * clears, a later query (or a later run of the same query) that
-    * trains an already-seen tokenizer config is priced as a memo hit
-    * instead of its training cost. */
+    * pinned frames ([[release]], blocking) AND every memo (BPE and
+    * unigram training states, stored PQ codebooks). Harnesses that time
+    * or profile queries one by one call this between queries — without
+    * the memo clears, a later query (or a later run of the same query)
+    * that trains an already-seen config is priced as a memo hit instead
+    * of its training cost. */
   def resetQueryState(): Unit = {
     release(blocking = true)
-    Ngrams.clearBpeCache()
-    Ngrams.clearUnigramCache()
+    allMemos.foreach(_.clear())
   }
 }

@@ -889,12 +889,12 @@ object Similarity {
     (r.getInt(0) + 1, r.getInt(1) + 1)
   }
 
-  /** Session-scoped stored-codebook memo (VERDICT r12 item 7): probing
-    * a persisted PQ index used to pay two driver jobs per query batch —
-    * the shape aggregate and the m×ksub codebook collect over the
-    * manifest read — a fixed cost that dominated the probe's bench row.
-    * The stored codebook is immutable model state, so it now collects
-    * ONCE per (session, canonicalized source plan): repeat probes (or
+  /** Session stored-codebook memo (VERDICT r12 item 7,
+    * [[OpCaches.memo]]): probing a persisted PQ index used to pay two
+    * driver jobs per query batch — the shape aggregate and the m×ksub
+    * codebook collect over the manifest read — a fixed cost that
+    * dominated the probe's bench row. The stored codebook is immutable
+    * model state, so it now collects ONCE per source: repeat probes (or
     * appends) against the same stored table bind the memoized flat
     * centroid table straight into the ADC/encode expressions. A
     * drift-refreshed codebook commits new files, which changes the
@@ -907,15 +907,12 @@ object Similarity {
     * in-place overwrite changes the fingerprint and misses. Frames
     * with any leaf that is neither a file relation nor a local
     * relation are never memoized (collected fresh each call), so no
-    * source shape can serve stale. Bounded like the BPE memo (oldest
-    * entry evicted past the cap); entries are plain driver arrays
-    * (m×ksub floats), nothing persisted, so eviction is a map drop. */
-  private val codebookMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (org.apache.spark.sql.SparkSession,
-     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-     Seq[(String, Long, Long)]),
-    (Int, Int, Seq[Seq[Float]])]
-  private val codebookMemoCap = 4
+    * source shape can serve stale. Entries are plain driver arrays
+    * (m×ksub floats), nothing persisted, so freeing one is a map drop.
+    * `OpCaches.resetQueryState` clears it, so a timed probe pays its
+    * collect. */
+  private val codebookMemo =
+    OpCaches.memo[(Int, Int, Seq[Seq[Float]])](_ => ())
 
   /** (path, size, modtime) of every file behind the frame's leaves, or
     * None when a leaf can't be fingerprinted (then: don't memoize).
@@ -945,17 +942,7 @@ object Similarity {
     }
     leafFilesFingerprint(cb) match {
       case None => compute() // unidentifiable source: never serve a memo
-      case Some(fp) => codebookMemo.synchronized {
-        val key =
-          (cb.sparkSession, cb.queryExecution.analyzed.canonicalized, fp)
-        codebookMemo.getOrElse(key, {
-          while (codebookMemo.size >= codebookMemoCap)
-            codebookMemo.remove(codebookMemo.head._1)
-          val entry = compute()
-          codebookMemo.put(key, entry)
-          entry
-        })
-      }
+      case Some(fp) => codebookMemo(cb, fp)(compute())
     }
   }
 
@@ -1095,7 +1082,7 @@ object Similarity {
     var edges = knnGraph(corpus, k, numPlanes, bands, idCol, vecCol)
       .select("src", "dst")
     for (_ <- 1 to refineRounds) {
-      val e = OpCaches.register(edges.persist())
+      val e = OpCaches.pin(edges)
       val u = e.unionByName(
         e.select(col("dst").as("src"), col("src").as("dst")))
       val twoHop = u.as("x")
@@ -1124,8 +1111,8 @@ object Similarity {
   def mutualKnnGraph(corpus: DataFrame, k: Int, numPlanes: Int = 16,
                      bands: Int = 4, idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val g = OpCaches.register(
-      knnGraph(corpus, k, numPlanes, bands, idCol, vecCol).persist())
+    val g = OpCaches.pin(
+      knnGraph(corpus, k, numPlanes, bands, idCol, vecCol))
     g.join(g.select(col("dst").as("src"), col("src").as("dst")),
         Seq("src", "dst"), "left_semi")
       .filter(col("src") < col("dst"))
@@ -1397,10 +1384,9 @@ object Similarity {
     val b = Ops.spread(
       tgt.select(col(idCol).as("tgt_id"), col(vecCol).as("bv")),
       col("tgt_id"))
-    val scored = OpCaches.register(b.crossJoin(broadcast(a))
+    val scored = OpCaches.pin(b.crossJoin(broadcast(a))
       .select(col("src_id"), col("tgt_id"),
-        round(cosine(col("av"), col("bv")), 9).as("sim"))
-      .persist())
+        round(cosine(col("av"), col("bv")), 9).as("sim")))
     val wx = Window.partitionBy("src_id")
       .orderBy(col("sim").desc, col("tgt_id"))
     val wy = Window.partitionBy("tgt_id")

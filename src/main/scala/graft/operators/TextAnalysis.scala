@@ -273,12 +273,11 @@ object TextAnalysis {
               quantizeDecimals: Int = 9): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(28, quantizeDecimals)
-    val clt = OpCaches.register(
+    val clt = OpCaches.pin(
       train.select(col(labelCol).as("__label"),
           explode(split(col(textCol), " ")).as("__w"))
         .filter(length(col("__w")) >= 1)
-        .groupBy("__label", "__w").agg(count(lit(1)).as("__c"))
-        .persist())
+        .groupBy("__label", "__w").agg(count(lit(1)).as("__c")))
     val cl = clt.groupBy("__label").agg(sum(col("__c")).as("__tot"))
     val vocab = clt.select("__w").distinct()
     val vsize = vocab.agg(count(lit(1)).as("__v"))

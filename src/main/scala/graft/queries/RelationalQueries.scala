@@ -394,7 +394,7 @@ object RelationalQueries {
         .groupBy("l_suppkey")
         .agg(sumDec(col("l_extendedprice") * (lit(1) - col("l_discount")), 6)
                .as("total_revenue"))
-      val revP = operators.OpCaches.register(rev.persist())
+      val revP = operators.OpCaches.pin(rev)
       val mx = revP.agg(max(col("total_revenue")).as("__mx"))
       revP.join(broadcast(mx), col("total_revenue") === col("__mx"))
         .join(broadcast(t(s, d, "supplier")),

@@ -362,7 +362,7 @@ object StreamOps {
               Dedup.signatureIndex(survivors, idCol, textCol,
                 shingleN, numHashes, bands),
               indexTable, Seq(idCol, "band_id"), None, nBuckets, batchId)
-            // the pair join registered its per-batch signature cache;
+            // the pair join pinned its per-batch signature cache;
             // foreachBatch bodies run serially, so releasing here frees
             // it before the next micro-batch stacks another
             graft.operators.OpCaches.release(blocking = true)

@@ -598,4 +598,24 @@ class ManifestTableSpec extends SparkTestBase {
     assert(ManifestTable.currentFiles(spark, t2).map(_._1).toSet.size === 4,
       "40 rows at 4/bucket clamps to the 4-bucket capacity")
   }
+
+  test("an index cache whose build failed before its manifest commit is " +
+       "rebuilt, not served") {
+    val d = java.nio.file.Files.createTempDirectory("graft-sig-corpus")
+      .toString
+    (0L until 16L).map(i => (i, s"w${i % 5} w${i % 3} w${i % 7} w$i"))
+      .toDF("doc_id", "text").write.parquet(s"$d/documents.parquet")
+    val dir = SparkEntry.ensureSigCache(spark, d)
+    val n = ManifestTable.read(spark, dir).count()
+    assert(n > 0)
+    // a build that threw after writing data/ but before its commit
+    // leaves data files and no committed manifest
+    val fs = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(dir, "_manifests"), true))
+    assert(fs.exists(new Path(dir, "data")))
+    assert(SparkEntry.ensureSigCache(spark, d) === dir)
+    assert(ManifestTable.read(spark, dir).count() === n,
+      "ensure must rebuild an uncommitted index, not return it")
+  }
 }

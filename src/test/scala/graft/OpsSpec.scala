@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.catalyst.plans.logical.Range
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
-import graft.operators.{OpCaches, Ops}
+import graft.operators.{OpCaches, Ops, Similarity}
 
 class OpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -72,6 +73,74 @@ class OpsSpec extends SparkTestBase {
       assert(plan.collectFirst { case r: Range => r }.isEmpty,
         plan.treeString)
     }
+  }
+
+  test("OpCaches.pin: cached at the session default level, counted by " +
+       "registered, unpersisted by release") {
+    OpCaches.release(blocking = true)
+    val base = OpCaches.registered
+    val df = OpCaches.pin(spark.range(100).toDF("k").filter(col("k") > 7))
+    assert(df.storageLevel === StorageLevel.fromString(
+      spark.conf.get("spark.sql.defaultCacheStorageLevel")))
+    assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(OpCaches.registered === base + 1)
+    assert(df.count() === 92)
+    OpCaches.release(blocking = true)
+    assert(df.storageLevel === StorageLevel.NONE)
+    assert(OpCaches.registered === base)
+  }
+
+  test("OpCaches.memo: a hit does not recompute; past the cap the oldest " +
+       "entry is freed and evicted; resetQueryState empties it") {
+    val freed = scala.collection.mutable.ListBuffer.empty[Int]
+    val memo = OpCaches.memo[Int](v => freed += v)
+    var computed = 0
+    def get(df: org.apache.spark.sql.DataFrame, p: Int): Int =
+      memo(df, p) { computed += 1; p * 10 }
+    val base = OpCaches.registered
+    assert(get(spark.range(3).toDF("k"), 1) === 10)
+    // an independent build of the same plan canonicalizes to the same key
+    assert(get(spark.range(3).toDF("k"), 1) === 10)
+    assert(computed === 1, "a hit must not recompute")
+    assert(OpCaches.registered === base + 1, "registered counts entries")
+    val df = spark.range(3).toDF("k")
+    (2 to OpCaches.MemoCap).foreach(get(df, _))
+    assert(memo.size === OpCaches.MemoCap && freed.isEmpty)
+    assert(get(df, OpCaches.MemoCap + 1) === 10 * (OpCaches.MemoCap + 1))
+    assert(memo.size === OpCaches.MemoCap, "the memo is bounded")
+    assert(freed.toSeq === Seq(10), "the oldest entry is freed first")
+    assert(computed === OpCaches.MemoCap + 1)
+    get(df, 1)
+    assert(computed === OpCaches.MemoCap + 2, "an evicted key recomputes")
+    assert(freed.toSeq === Seq(10, 20))
+    OpCaches.resetQueryState()
+    assert(memo.size === 0 && OpCaches.registered === 0)
+    assert(freed.size === 2 + OpCaches.MemoCap, "a clear frees every entry")
+  }
+
+  test("resetQueryState empties the PQ codebook memo: a probe of the same " +
+       "stored codebook collects again") {
+    val corpus = (0 until 32).map(i => (i.toLong,
+      Seq.tabulate(4)(j => ((i * 7 + j * 3) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    val queries = corpus.filter(col("vec_id") < 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ops-pq")
+      .toString
+    val (cb0, codes0) = Similarity.pqIndex(corpus, m = 2, ksub = 2)
+    Similarity.writePqIndex(dir, cb0, codes0)
+    val (cb, codes) = Similarity.readPqIndex(spark, dir)
+    def probe(): Int =
+      jobsDuring(Similarity.pqTopKFromIndex(cb, codes, corpus, queries,
+        k = 2, shortlist = 4))._2
+    OpCaches.resetQueryState()
+    val first = probe()
+    assert(first > 0, "the first probe collects the stored codebook")
+    assert(OpCaches.registered === 1)
+    assert(probe() === 0, "a repeat probe binds the memoized codebook")
+    OpCaches.resetQueryState()
+    assert(OpCaches.registered === 0)
+    assert(probe() === first, "after the reset the probe collects again")
+    OpCaches.resetQueryState()
   }
 
   test("skyline2D plan: local window partitioned by bucket, cross-bucket " +

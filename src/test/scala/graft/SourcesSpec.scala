@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,24 +20,6 @@ class SourcesSpec extends SparkTestBase {
   private def put(path: String, text: String): Unit = {
     Files.createDirectories(Paths.get(path).getParent)
     Files.writeString(Paths.get(path), text)
-  }
-
-  /** Spark jobs started while `body` runs, counted by a listener that
-    * sees only this body's events (the bus is drained on both sides). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    assert(ListenerDrain.drain(sc))
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      assert(ListenerDrain.drain(sc))
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   private val nestedSchema = StructType(Seq(

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +20,24 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit = {
     try graft.operators.OpCaches.resetQueryState()
     finally super.afterAll()
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener that
+    * sees only this body's events (the bus is drained on both sides). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    assert(ListenerDrain.drain(sc))
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      assert(ListenerDrain.drain(sc))
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Rows of a DataFrame as a sorted Seq of string-rendered tuples — a
