@@ -500,22 +500,16 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
-  /** MinHash signature: k independent hash functions; signature[i] = min
-    * over shingles of hash_i(shingle). Native codegen'd expression — one
-    * base XXH64 per shingle plus k cheap long re-hashes, single tight loop
-    * (VectorExprs.MinHashSig). */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    VectorExprs.minhashSig(shingles, k)
-
   /** Banded MinHash signature table — the shared front half of every LSH
     * near-dup plan here ([[minhashNearDups]], [[dedupAgainstCorpus]]).
     * One row per (document, band):
     * `(doc_id, hsh: array<long>, bh: array<long>, band_id, band_hash)`,
     * where `hsh` is the document's DISTINCT shingle-hash set (rides along
     * so exact-Jaccard verification needs no join back to the text) and
-    * `bh` the full band-hash vector (for the first-shared-band pair
-    * dedup trick). Every per-row step is a native codegen'd expression
-    * (ShingleHash64 → MinHashFromHashes → BandHashes64). Empty and
+    * `bh` the full band-hash vector (the signature
+    * [[Ops.firstSharedBandJoin]] reads). Every per-row step is a native
+    * codegen'd expression (ShingleHash64 → MinHashFromHashes →
+    * BandHashes64). Empty and
     * whitespace-only documents are dropped (they would all share one
     * degenerate bucket — an all-pairs blowup on junk docs); the
     * size(hsh) > 0 filter is the backstop for any other zero-shingle
@@ -527,7 +521,7 @@ object Dedup {
     val r = numHashes / bands
     val toks = split(col(textCol), " ")
     val shHashes = VectorExprs.shingleHash64(toks, shingleN)
-    Ops.spread(
+    val sigs = Ops.spread(
         df.select(col(idCol).as("doc_id"), col(textCol))
           .filter(length(regexp_replace(col(textCol), "\\s", "")) > 0),
         col("doc_id"))
@@ -537,9 +531,29 @@ object Dedup {
                 VectorExprs.minhashFromHashes(shHashes, numHashes),
                 bands, r).as("bh"))
       .filter(size(col("hsh")) > 0)
-      .select(col("doc_id"), col("hsh"), col("bh"), posexplode(col("bh")))
-      .select(col("doc_id"), col("hsh"), col("bh"),
-              col("pos").as("band_id"), col("col").as("band_hash"))
+    Ops.explodeBands(sigs, "bh", bands, minhashBand, "band_hash")
+  }
+
+  /** Band j's key of a MinHash band-hash vector: `bh[j]`. */
+  private val minhashBand: (Column, Int) => Column = (bh, j) => bh.getItem(j)
+
+  /** The banded MinHash candidate join ([[Ops.firstSharedBandJoin]] over
+    * two [[bandedSignatures]] tables). */
+  private def minhashBandJoin(a: DataFrame, b: DataFrame, bands: Int,
+                              on: Column = lit(true)): DataFrame =
+    Ops.firstSharedBandJoin(a, b, "bh", bands, minhashBand, on, "band_hash")
+
+  /** The `bucketCap` bound: each (band_id, band_hash) bucket keeps its
+    * first `cap` docs by id. The rank window partitions by the key the
+    * candidate join shuffles on, and the rn <= cap filter gets Spark's
+    * WindowGroupLimit pushdown, so map tasks forward at most `cap` rows
+    * per bucket into the join's exchange. */
+  private def capBuckets(banded: DataFrame, cap: Int): DataFrame = {
+    val bw = Window.partitionBy(col("band_id"), col("band_hash"))
+      .orderBy(col("doc_id"))
+    banded.withColumn("__rn", row_number().over(bw))
+      .filter(col("__rn") <= cap)
+      .drop("__rn")
   }
 
   /** MinHash + LSH near-duplicate pairs.
@@ -548,8 +562,9 @@ object Dedup {
     * → exact Jaccard verify. Output: (doc_a, doc_b, jaccard) with
     * doc_a < doc_b and jaccard >= threshold.
     *
-    * The candidate join is an equi-join on (band_id, band_hash): shuffles
-    * by bucket, never materializes the n² pair space — EXCEPT when one
+    * The candidate join is an equi-join on (band_id, band_hash)
+    * ([[Ops.firstSharedBandJoin]]): shuffles by bucket, never
+    * materializes the n² pair space — EXCEPT when one
     * bucket degenerates (thousands of near-identical template docs
     * sharing a band), where bucket² pairs would blow up the join.
     * `bucketCap` bounds that: the join's LEFT side keeps only each
@@ -568,12 +583,9 @@ object Dedup {
     * organic bucket sizes — the output is byte-identical to the uncapped
     * plan's.
     *
-    * Plan shape: the rank window partitions by (band_id, band_hash) —
-    * the key the candidate join shuffles on — and the rn<=cap filter
-    * gets Spark's WindowGroupLimit pushdown, so map tasks forward at
-    * most `bucketCap` rows per bucket into the left exchange. The right
-    * side prunes the window away entirely (its rank column is unused)
-    * and stays the plain banded pipeline. The capped left side's window
+    * Plan shape: the cap is a rank window keyed like the candidate
+    * join's shuffle ([[capBuckets]]), on the left side only; the right
+    * side stays the plain banded pipeline. The capped left side's window
     * breaks exchange reuse between the two join sides, so the banded
     * signature table is PERSISTED and derived once — the
     * materialize-the-signature-table-once pattern a production pipeline
@@ -594,29 +606,9 @@ object Dedup {
     // pattern a production pipeline uses across a whole dedup run
     val banded = OpCaches.pin(
       bandedSignatures(df, idCol, textCol, shingleN, numHashes, bands))
-    // Bucket-size bound on the LEFT join side only (see scaladoc): rank
-    // within the (band, hash) bucket, keep the first bucketCap docs. The
-    // rn<=cap filter gets the WindowGroupLimit pushdown.
-    val bw = Window.partitionBy(col("band_id"), col("band_hash"))
-      .orderBy(col("doc_id"))
-    val a = banded.withColumn("__rn", row_number().over(bw))
-      .filter(col("__rn") <= bucketCap)
-      .drop("__rn")
-      .as("a")
-    val b = banded.as("b")
-    // A pair colliding in k bands would surface k times; instead of a
-    // dropDuplicates shuffle over every candidate (with both shingle-hash
-    // arrays riding it), keep only the row whose band is the pair's FIRST
-    // matching band — each pair survives exactly once, straight out of
-    // the join, no extra exchange. array_position is 1-based;
-    // posexplode's band_id is 0-based.
-    a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        array_position(
-          zip_with(col("a.bh"), col("b.bh"), (x, y) => x === y),
-          true) === col("a.band_id") + 1)
+    // bucket-size bound on the LEFT join side only (see scaladoc)
+    minhashBandJoin(capBuckets(banded, bucketCap), banded, bands,
+        col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
               col("a.hsh").as("h_a"), col("b.hsh").as("h_b"))
       .withColumn("inter", size(array_intersect(col("h_a"), col("h_b"))))
@@ -636,9 +628,9 @@ object Dedup {
     * anti-join, with the same ids-only candidate shape.
     *
     * Plan: banded MinHash signatures on both sides ([[bandedSignatures]]),
-    * cross-table equi-join on (band_id, band_hash) — each colliding pair
-    * surfaces exactly once, at its first shared band, so no dedup
-    * exchange — exact Jaccard verify on the shingle-hash sets, then the
+    * cross-table equi-join on (band_id, band_hash)
+    * ([[Ops.firstSharedBandJoin]]: no dedup exchange) — exact Jaccard
+    * verify on the shingle-hash sets, then the
     * verified batch ids anti-join back against `batch`. Cost is linear
     * in batch+corpus signatures; the only join is bucket-keyed. Rows of
     * `batch` that are empty or whitespace-only carry no signature and
@@ -692,22 +684,11 @@ object Dedup {
                         bucketCap: Int = 500): DataFrame = {
     require(bucketCap >= 1, "bucketCap must retain a cohort")
     val nb = bandedSignatures(batch, idCol, textCol, shingleN, numHashes,
-      bands).as("n")
-    val bw = Window.partitionBy(col("band_id"), col("band_hash"))
-      .orderBy(col("doc_id"))
-    val cb = index
-      .withColumn("__rn", row_number().over(bw))
-      .filter(col("__rn") <= bucketCap)
-      .drop("__rn")
-      .as("c")
-    val contaminated = nb.join(cb,
-        col("n.band_id") === col("c.band_id") &&
-        col("n.band_hash") === col("c.band_hash") &&
-        array_position(
-          zip_with(col("n.bh"), col("c.bh"), (x, y) => x === y),
-          true) === col("n.band_id") + 1)
-      .select(col("n.doc_id").as("__hit_id"),
-              col("n.hsh").as("h_n"), col("c.hsh").as("h_c"))
+      bands)
+    val contaminated = minhashBandJoin(nb, capBuckets(index, bucketCap),
+        bands)
+      .select(col("a.doc_id").as("__hit_id"),
+              col("a.hsh").as("h_n"), col("b.hsh").as("h_c"))
       .filter(size(array_intersect(col("h_n"), col("h_c"))).cast("double") /
               size(array_union(col("h_n"), col("h_c"))) >= threshold)
       .select("__hit_id")
@@ -753,36 +734,25 @@ object Dedup {
 
   /** SimHash near-dup candidates: bucket by 16-bit chunks (a doc pair with
     * hamming distance <= 3 shares at least one of 4 chunks — pigeonhole),
-    * verify by popcount of XOR. Takes a (doc_id, simhash) table, e.g. from
-    * [[simhashDf]]. */
+    * verify by popcount of XOR inside the [[Ops.firstSharedBandJoin]].
+    * Takes a (doc_id, simhash) table, e.g. from [[simhashDf]]. */
   def simhashPairs(hashed0: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val hashed = hashed0.toDF("doc_id", "sh")
-    def chunk(sh: Column, c: Column): Column =
-      call_function("shiftrightunsigned", sh, (c * 16).cast("int"))
-        .bitwiseAND(0xFFFFL)
-    val chunked = hashed.select(col("doc_id"), col("sh"),
-      explode(transform(sequence(lit(0), lit(3)),
-        c => struct(c.as("chunk_id"),
-          chunk(col("sh"), c).as("chunk_val")))).as("ch"))
-      .select(col("doc_id"), col("sh"), col("ch.chunk_id"), col("ch.chunk_val"))
-    val a = chunked.as("a"); val b = chunked.as("b")
-    // Both the hamming verify (xor+popcount — nearly free) and the
-    // first-matching-chunk pick run INSIDE the join: a qualifying pair
-    // exits the join exactly once (from its first shared chunk), so no
-    // dropDuplicates re-shuffle of the candidate space is ever paid.
-    // array_position is 1-based; chunk_id is 0-based.
-    a.join(b,
-        col("a.chunk_id") === col("b.chunk_id") &&
-        col("a.chunk_val") === col("b.chunk_val") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= maxHamming &&
-        array_position(
-          transform(sequence(lit(0), lit(3)),
-            c => chunk(col("a.sh"), c) === chunk(col("b.sh"), c)),
-          true) === col("a.chunk_id") + 1)
+    val chunked = Ops.explodeBands(hashed0.toDF("doc_id", "sh"), "sh",
+      SimhashChunks, simhashChunk)
+    // the hamming verify (xor+popcount — nearly free) runs INSIDE the
+    // join, so non-dups never leave it
+    Ops.firstSharedBandJoin(chunked, chunked, "sh", SimhashChunks,
+        simhashChunk,
+        col("a.doc_id") < col("b.doc_id") && simhashHamming <= maxHamming)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
+        simhashHamming.as("hamming"))
   }
+
+  /** SimHash candidate bands: 4 chunks of 16 bits ([[simhashPairs]]). */
+  private val SimhashChunks = 4
+  private val simhashChunk = Ops.longBand(16)
+  private def simhashHamming: Column =
+    bit_count(col("a.sh").bitwiseXOR(col("b.sh")))
 
   /** End-to-end SimHash near-dup detection over a text column. */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
@@ -837,34 +807,16 @@ object Dedup {
     * (`maxHamming` ≤ 3 is CERTAIN recall by the 16-bit-chunk pigeonhole
     * — 4 chunks, ≤ 3 flipped bits, so at least one chunk is untouched).
     * Both inputs are (id, simhash) tables; no id-order constraint (the
-    * sides are different tables). A qualifying pair exits the join
-    * exactly once, from its first shared chunk — no dedup exchange —
-    * and only ids+longs ever shuffle. Output: (id_l, id_r, hamming). */
+    * sides are different tables). Pairs exit the
+    * [[Ops.firstSharedBandJoin]] once each, and only ids+longs ever
+    * shuffle. Output: (id_l, id_r, hamming). */
   def simhashCrossPairs(left0: DataFrame, right0: DataFrame,
                         maxHamming: Int = 3): DataFrame = {
-    val left = left0.toDF("id_l", "sh_l")
-    val right = right0.toDF("id_r", "sh_r")
-    def chunk(sh: Column, c: Column): Column =
-      call_function("shiftrightunsigned", sh, (c * 16).cast("int"))
-        .bitwiseAND(0xFFFFL)
-    def chunked(df: DataFrame, sh: String): DataFrame =
-      df.select(col("*"),
-        explode(transform(sequence(lit(0), lit(3)),
-          c => struct(c.as("chunk_id"),
-            chunk(col(sh), c).as("chunk_val")))).as("ch"))
-        .select(col("*"), col("ch.chunk_id").as("cid"),
-          col("ch.chunk_val").as("cval")).drop("ch")
-    chunked(left, "sh_l").as("a")
-      .join(chunked(right, "sh_r").as("b"),
-        col("a.cid") === col("b.cid") &&
-        col("a.cval") === col("b.cval") &&
-        bit_count(col("a.sh_l").bitwiseXOR(col("b.sh_r"))) <= maxHamming &&
-        array_position(
-          transform(sequence(lit(0), lit(3)),
-            c => chunk(col("a.sh_l"), c) === chunk(col("b.sh_r"), c)),
-          true) === col("a.cid") + 1)
-      .select(col("a.id_l"), col("b.id_r"),
-        bit_count(col("a.sh_l").bitwiseXOR(col("b.sh_r"))).as("hamming"))
+    def chunked(df: DataFrame, id: String): DataFrame =
+      Ops.explodeBands(df.toDF(id, "sh"), "sh", SimhashChunks, simhashChunk)
+    Ops.firstSharedBandJoin(chunked(left0, "id_l"), chunked(right0, "id_r"),
+        "sh", SimhashChunks, simhashChunk, simhashHamming <= maxHamming)
+      .select(col("a.id_l"), col("b.id_r"), simhashHamming.as("hamming"))
   }
 
   /** Connected components over a near-duplicate pair list: labels every

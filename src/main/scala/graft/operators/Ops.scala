@@ -82,4 +82,58 @@ object Ops {
       df.queryExecution.optimizedPlan.stats.sizeInBytes / maxSplit + 1
     if (estSplits < par) df.repartition(par, by) else df
   }
+
+  /** Band `j`'s key of a single-long signature cut into `r`-bit bands
+    * (SimHash chunks, hyperplane-LSH bands): `(sig >>> j·r) & mask`. The
+    * mask is `-1L >>> (64 - r)`: at r = 64 `(1L << r) - 1` is 0 on the
+    * JVM (`1L << 64 == 1L`), which would put every signature in one
+    * bucket and turn the banded join into all-pairs. */
+  private[graft] def longBand(r: Int): (Column, Int) => Column = {
+    require(r >= 1 && r <= 64, s"band width must be 1..64 bits, got $r")
+    val mask = -1L >>> (64 - r)
+    (sig, j) => shiftrightunsigned(sig, j * r).bitwiseAND(mask)
+  }
+
+  /** One row per (row, band) of `df`: every input column plus
+    * `band_id` (0-based) and `valCol`, band `band_id`'s key
+    * `bandOf(sig, band_id)`. The band keys are built as one unrolled
+    * array of codegen'd expressions, no lambda. The bucket side of
+    * [[firstSharedBandJoin]]. */
+  private[graft] def explodeBands(df: DataFrame, sig: String, bands: Int,
+                                  bandOf: (Column, Int) => Column,
+                                  valCol: String = "band_val"): DataFrame =
+    df.select(col("*"),
+      posexplode(array((0 until bands).map(bandOf(col(sig), _)): _*))
+        .as(Seq("band_id", valCol)))
+
+  /** Banded candidate join with first-shared-band emission — the one
+    * place every LSH / SimHash / MinHash candidate join decides which
+    * bucket emits a pair. `a` and `b` are [[explodeBands]] tables
+    * (aliased "a" and "b" here, so `on` — the caller's id order or
+    * Hamming bound — and the caller's select use `a.` / `b.`).
+    *
+    * A pair colliding in k bands meets in k buckets. Instead of a
+    * `dropDuplicates` exchange over the whole candidate space, the join
+    * keeps only the row whose band is the pair's FIRST shared band: each
+    * pair exits the join exactly once and the only exchange is the
+    * bucket shuffle, linear in the input. "No earlier band shared" is
+    * the unrolled chain `a.band_id <= j || bandOf(a.sig, j) !=
+    * bandOf(b.sig, j)` for j < bands − 1: codegen'd comparisons on the
+    * signature each row already carries, no per-candidate array and no
+    * interpreted lambda (the `zip_with`/`array_position` form it
+    * replaced measured 0.79 s against 0.72 s on `q_knn_graph`). */
+  private[graft] def firstSharedBandJoin(a: DataFrame, b: DataFrame,
+                                         sig: String, bands: Int,
+                                         bandOf: (Column, Int) => Column,
+                                         on: Column = lit(true),
+                                         valCol: String = "band_val"): DataFrame = {
+    val noEarlierShared = (0 until bands - 1).map { j =>
+      col("a.band_id") <= j ||
+        bandOf(col(s"a.$sig"), j) =!= bandOf(col(s"b.$sig"), j)
+    }
+    a.as("a").join(b.as("b"),
+      (Seq(col("a.band_id") === col("b.band_id"),
+           col(s"a.$valCol") === col(s"b.$valCol"), on) ++ noEarlierShared)
+        .reduce(_ && _))
+  }
 }

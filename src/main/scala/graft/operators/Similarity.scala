@@ -41,11 +41,9 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
               lit(0.0), (acc, v) => acc + v)
 
-  def normD(a: Column): Column = sqrt(dotD(a, a))
-
   /** Cosine similarity — single-pass native expression; bit-identical to
-    * `dotD(a,b) / (normD(a) * normD(b))` (same per-element accumulation
-    * order) but one array traversal instead of three. */
+    * `dotD(a,b) / (sqrt(dotD(a,a)) * sqrt(dotD(b,b)))` (same per-element
+    * accumulation order) but one array traversal instead of three. */
   def cosine(a: Column, b: Column): Column = VectorExprs.cosineSim(a, b)
 
   /** Brute-force cosine top-k: for every vector in `queries`, the k most
@@ -78,39 +76,32 @@ object Similarity {
 
   /** LSH-bucketed approximate top-k: candidates limited to vectors sharing
     * the query's hyperplane signature on at least one band, then exact
-    * cosine + rank within the candidate set. The bucket join is an
-    * equi-join (shuffle by band value) — scales linearly with corpus size
-    * for near-uniform buckets. */
+    * cosine + rank within the candidate set. The bucket join
+    * ([[Ops.firstSharedBandJoin]]) is an equi-join (shuffle by band
+    * value) — scales linearly with corpus size for near-uniform
+    * buckets. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               numPlanes: Int = 16, bands: Int = 4,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
     require(numPlanes % bands == 0)
-    val r = numPlanes / bands
-    val mask = (1L << r) - 1
-    // Band tables carry IDS ONLY — the candidate join and its dedup must
-    // not shuffle vectors (same discipline as cosineNearDups /
-    // minhashNearDups). Vectors re-attach afterwards: the query side
-    // broadcasts (queries are small by contract), the corpus side moves
-    // each candidate vector through exactly one shuffle.
-    def banded(df: DataFrame, id: String): DataFrame =
-      df.select(col(id),
-          lshSignature(col("__v"), numPlanes).as("sig"))
-        .select(col(id), explode(
-          transform(sequence(lit(0), lit(bands - 1)), bd =>
-            struct(bd.as("band_id"),
-              call_function("shiftrightunsigned", col("sig"), (bd * r).cast("int"))
-                .bitwiseAND(mask).as("band_val")))).as("bv"))
-        .select(col(id), col("bv.band_id"), col("bv.band_val"))
+    val bandOf = Ops.longBand(numPlanes / bands)
+    // Band tables carry IDS ONLY — the candidate join must not shuffle
+    // vectors (same discipline as cosineNearDups / minhashNearDups).
+    // Vectors re-attach afterwards: the query side broadcasts (queries
+    // are small by contract), the corpus side moves each candidate
+    // vector through exactly one shuffle.
+    def banded(df: DataFrame, id: String): DataFrame = Ops.explodeBands(
+      df.select(col(id), lshSignature(col("__v"), numPlanes).as("sig")),
+      "sig", bands, bandOf)
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__v"))
     val cv = Ops.spread(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__v")),
       col("neighbor_id"))
-    val cand = banded(cv, "neighbor_id").join(banded(qv, "query_id"),
-        Seq("band_id", "band_val"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
+    val cand = Ops.firstSharedBandJoin(banded(cv, "neighbor_id"),
+        banded(qv, "query_id"), "sig", bands, bandOf,
+        col("a.neighbor_id") =!= col("b.query_id"))
+      .select(col("b.query_id"), col("a.neighbor_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
     cand
@@ -461,8 +452,8 @@ object Similarity {
   }
 
   /** Embedding near-duplicate pairs: cosine >= threshold. Candidate
-    * generation via LSH band buckets (same plan shape as minhashNearDups —
-    * no n² cross join).
+    * generation via LSH band buckets ([[Ops.firstSharedBandJoin]], the
+    * plan shape of minhashNearDups — no n² cross join).
     *
     * Default 64 planes in 4 bands of 16 bits: a random pair collides on a
     * band with p = 2^-16, so candidate volume stays ~n²/65536 per band —
@@ -477,8 +468,7 @@ object Similarity {
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
     require(numPlanes % bands == 0)
-    val r = numPlanes / bands
-    val mask = (1L << r) - 1
+    val bandOf = Ops.longBand(numPlanes / bands)
     // Signature table — feeds both sides of the band self-join (ids only)
     // and both sides of the verify join. Not persisted: recompute at full
     // parallelism beats columnar-caching array columns (see
@@ -488,26 +478,10 @@ object Similarity {
                           col("id"))
       .withColumn("sig", lshSignature(col("v"), numPlanes))
     // Candidate generation shuffles ids only, never the vectors.
-    def bandOf(sig: Column, bd: Column): Column =
-      call_function("shiftrightunsigned", sig, (bd * r).cast("int"))
-        .bitwiseAND(mask)
-    val banded = sigs.select(col("id"), col("sig"), explode(
-        transform(sequence(lit(0), lit(bands - 1)), bd =>
-          struct(bd.as("band_id"), bandOf(col("sig"), bd).as("band_val"))))
-        .as("bv"))
-      .select(col("id"), col("sig"), col("bv.band_id"), col("bv.band_val"))
-    val a = banded.as("a"); val b = banded.as("b")
-    // First-matching-band pick inside the join (cf. Dedup.minhashNearDups):
-    // each colliding pair exits exactly once, so no dropDuplicates
-    // re-shuffle of the candidate space. array_position is 1-based.
-    val cand = a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_val") === col("b.band_val") &&
-        col("a.id") < col("b.id") &&
-        array_position(
-          transform(sequence(lit(0), lit(bands - 1)),
-            bd => bandOf(col("a.sig"), bd) === bandOf(col("b.sig"), bd)),
-          true) === col("a.band_id") + 1)
+    val banded = Ops.explodeBands(sigs.select(col("id"), col("sig")), "sig",
+      bands, bandOf)
+    val cand = Ops.firstSharedBandJoin(banded, banded, "sig", bands, bandOf,
+        col("a.id") < col("b.id"))
       .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"))
     // Vectors move through exactly one shuffle each, candidates only.
     val vA = sigs.select(col("id").as("vec_a"), col("v").as("va"))
@@ -614,9 +588,8 @@ object Similarity {
     *
     * Plan shape at 100 TB: both sides carry the SAME hyperplane
     * signatures; candidates come from the banded cross-table equi-join
-    * (ids + band keys only — vectors never ride the candidate shuffle),
-    * each (train, eval) pair exits at its first shared band (no
-    * dropDuplicates exchange), exact cosine verifies, and one left-anti
+    * (ids + band keys only — vectors never ride the candidate shuffle;
+    * [[Ops.firstSharedBandJoin]]), exact cosine verifies, and one left-anti
     * join removes contaminated ids. The eval set is typically small but
     * is NOT assumed broadcast-able — every stage is a shuffle-by-key
     * plan. Exact and near-exact copies share every band (certain
@@ -628,28 +601,14 @@ object Similarity {
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
     require(numPlanes % bands == 0)
-    val r = numPlanes / bands
-    val mask = (1L << r) - 1
-    def bandOf(sig: Column, bd: Column): Column =
-      call_function("shiftrightunsigned", sig, (bd * r).cast("int"))
-        .bitwiseAND(mask)
-    def banded(df: DataFrame, outId: String) = Ops.spread(
-        df.select(col(idCol).as(outId), col(vecCol).as("v")), col(outId))
-      .withColumn("sig", lshSignature(col("v"), numPlanes))
-      .select(col(outId), col("sig"), explode(
-          transform(sequence(lit(0), lit(bands - 1)), bd =>
-            struct(bd.as("band_id"), bandOf(col("sig"), bd).as("band_val"))))
-          .as("bv"))
-      .select(col(outId), col("sig"), col("bv.band_id"), col("bv.band_val"))
-    val a = banded(train, "train_id").as("a")
-    val b = banded(evalSet, "eval_id").as("b")
-    val cand = a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_val") === col("b.band_val") &&
-        array_position(
-          transform(sequence(lit(0), lit(bands - 1)),
-            bd => bandOf(col("a.sig"), bd) === bandOf(col("b.sig"), bd)),
-          true) === col("a.band_id") + 1)
+    val bandOf = Ops.longBand(numPlanes / bands)
+    def banded(df: DataFrame, outId: String) = Ops.explodeBands(
+      Ops.spread(df.select(col(idCol).as(outId), col(vecCol).as("v")),
+          col(outId))
+        .select(col(outId), lshSignature(col("v"), numPlanes).as("sig")),
+      "sig", bands, bandOf)
+    val cand = Ops.firstSharedBandJoin(banded(train, "train_id"),
+        banded(evalSet, "eval_id"), "sig", bands, bandOf)
       .select(col("a.train_id"), col("b.eval_id"))
     val tv = train.select(col(idCol).as("train_id"), col(vecCol).as("tv"))
     val ev = evalSet.select(col(idCol).as("eval_id"), col(vecCol).as("ev"))
@@ -1006,39 +965,16 @@ object Similarity {
                bands: Int = 4, idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
     require(numPlanes % bands == 0)
-    val r = numPlanes / bands
-    val mask = (1L << r) - 1
+    val bandOf = Ops.longBand(numPlanes / bands)
     val cv = Ops.spread(
       corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")),
       col("__id"))
-    // a pair colliding in k bands is kept ONLY at its first shared band
-    // — each directed pair survives exactly once straight out of the
-    // join, no dropDuplicates exchange (the minhashNearDups/intervalJoin
-    // trick; VERDICT r10 item 3). Each row carries its one-long sig, and
-    // "no band before mine is shared" evaluates as a bands-wide chain of
-    // codegen'd bit tests on sig XOR — no arrays cross the shuffle, no
-    // interpreted lambdas in the join condition (an earlier zip_with/
-    // array_position formulation measured 2.3× the query).
-    val banded = cv
-      .select(col("__id"), lshSignature(col("__v"), numPlanes).as("sig"))
-      .select(col("__id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), bd =>
-          call_function("shiftrightunsigned", col("sig"),
-            (bd * r).cast("int")).bitwiseAND(mask)))
-          .as(Seq("band_id", "band_val")))
-    val xor = col("a.sig").bitwiseXOR(col("b.sig"))
-    def chunkDiffers(j: Int) =
-      call_function("shiftrightunsigned", xor, lit(j * r))
-        .bitwiseAND(mask) =!= 0
-    val noEarlierShared = (0 until bands - 1).foldLeft(lit(true)) {
-      (acc, j) => acc && (col("a.band_id") <= j || chunkDiffers(j))
-    }
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_val") === col("b.band_val") &&
-        col("a.__id") =!= col("b.__id") &&
-        noEarlierShared)
+    // each directed pair exits the join once ([[Ops.firstSharedBandJoin]])
+    val banded = Ops.explodeBands(
+      cv.select(col("__id"), lshSignature(col("__v"), numPlanes).as("sig")),
+      "sig", bands, bandOf)
+    val cand = Ops.firstSharedBandJoin(banded, banded, "sig", bands, bandOf,
+        col("a.__id") =!= col("b.__id"))
       .select(col("a.__id").as("src"), col("b.__id").as("dst"))
     val w = Window.partitionBy(col("src"))
       .orderBy(col("sim").desc, col("dst"))

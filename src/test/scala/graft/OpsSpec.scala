@@ -143,6 +143,59 @@ class OpsSpec extends SparkTestBase {
     OpCaches.resetQueryState()
   }
 
+  test("firstSharedBandJoin: each pair sharing a band exits once, at its " +
+       "smallest shared band (seeded random signatures, self and cross)") {
+    val bands = 4
+    val r = 4
+    val bandOf = Ops.longBand(r)
+    def band(s: Long, j: Int): Long = (s >>> (j * r)) & 0xFL
+    val rnd = new scala.util.Random(11)
+    // full 64-bit signatures (the bits above bands·r must be masked off)
+    // with 4-bit bands, so random collisions are common; planted rows
+    // copy a random set of bands from an earlier row, so pairs sharing
+    // several bands, none of them band 0, are common too
+    val sigs = (0 until 60).foldLeft(Vector.empty[Long]) { (acc, i) =>
+      val fresh = rnd.nextLong()
+      if (i < 10 || rnd.nextBoolean()) acc :+ fresh
+      else {
+        val src = acc(rnd.nextInt(acc.size))
+        val copied = (0 until bands).filter(_ => rnd.nextBoolean())
+        acc :+ copied.foldLeft(fresh) { (s, j) =>
+          val m = 0xFL << (j * r)
+          (s & ~m) | (src & m)
+        }
+      }
+    }
+    def firstShared(x: Long, y: Long): Option[Int] =
+      (0 until bands).find(j => band(x, j) == band(y, j))
+    def banded(ids: Seq[Int]) = Ops.explodeBands(
+      ids.map(i => (i, sigs(i))).toDF("id", "sig"), "sig", bands, bandOf)
+    def got(a: Seq[Int], b: Seq[Int],
+            on: org.apache.spark.sql.Column): Seq[(Int, Int, Int)] =
+      Ops.firstSharedBandJoin(banded(a), banded(b), "sig", bands, bandOf, on)
+        .select(col("a.id"), col("b.id"), col("a.band_id"))
+        .as[(Int, Int, Int)].collect().toSeq.sorted
+    def brute(pairs: Seq[(Int, Int)]): Seq[(Int, Int, Int)] =
+      pairs.flatMap { case (i, j) =>
+        firstShared(sigs(i), sigs(j)).map((i, j, _)) }.sorted
+    val all = sigs.indices
+    val self = got(all, all, col("a.id") < col("b.id"))
+    val selfWant = brute(for (i <- all; j <- all if i < j) yield (i, j))
+    assert(selfWant.map(_._3).distinct.size === bands,
+      "the fixture must exercise every band as a first shared band")
+    assert(self === selfWant)
+    val (left, right) = all.partition(_ % 3 == 0)
+    val cross = got(left, right, org.apache.spark.sql.functions.lit(true))
+    assert(cross === brute(for (i <- left; j <- right) yield (i, j)))
+  }
+
+  test("longBand: a 64-bit band is the whole signature") {
+    val sigs = Seq(-1L, Long.MinValue, 42L, 0L)
+    val got = Ops.explodeBands(sigs.toDF("sig"), "sig", 1, Ops.longBand(64))
+      .select(col("band_id"), col("band_val")).as[(Int, Long)].collect()
+    assert(got.toSeq === sigs.map((0, _)))
+  }
+
   test("skyline2D plan: local window partitioned by bucket, cross-bucket " +
        "table broadcast, no cartesian") {
     val df = Seq((1.0, 2.0), (2.0, 1.0)).toDF("x0", "y0")

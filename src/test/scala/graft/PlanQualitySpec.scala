@@ -159,6 +159,25 @@ class PlanQualitySpec extends SparkTestBase {
       assert(!p.contains("HashAggregate(keys=[doc_a"),
         s"$n: candidate pairs must exit the join deduplicated:\n$p")
     }
+    // the other banded sites, raw: no aggregate keyed on a pair id
+    val e = Tables.load(spark, d, "embeddings")
+    val q = e.filter(col("vec_id") < 20)
+    val sh = operators.Dedup.simhashDf(docs, "doc_id", "text")
+    for ((n, df, key) <- Seq(
+        ("cosineNearDups", operators.Similarity.cosineNearDups(e, 0.99),
+          "vec_a"),
+        ("semanticDecontaminate",
+          operators.Similarity.semanticDecontaminate(e, q), "train_id"),
+        ("simhashCrossPairs",
+          operators.Dedup.simhashCrossPairs(sh, sh.filter(col("doc_id") < 50)),
+          "id_l"),
+        ("lshTopK",
+          operators.Similarity.lshTopK(e, q, 10, numPlanes = 64, bands = 16),
+          "query_id"))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains(s"HashAggregate(keys=[$key"),
+        s"$n: candidate pairs must exit the join deduplicated:\n$p")
+    }
   }
 
   test("unpivot plans as a single Expand, not a self-union of scans") {

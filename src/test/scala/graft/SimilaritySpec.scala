@@ -90,6 +90,17 @@ class SimilaritySpec extends SparkTestBase {
       "negative top-k should push a map-side group limit")
   }
 
+  test("cosineNearDups: one 64-plane band keys the whole signature") {
+    // -v flips every hyperplane bit, so v and -v never share the band; a
+    // mask of (1L << 64) - 1 == 0 would bucket every vector together
+    val v = Array(0.3f, -0.5f, 0.8f, 0.1f)
+    val df = Seq((1L, v), (2L, v.map(-_)), (3L, v)).toDF("vec_id", "embedding")
+    val pairs = Similarity.cosineNearDups(df, threshold = -1.0,
+        numPlanes = 64, bands = 1)
+      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
+    assert(pairs === Set((1L, 3L)))
+  }
+
   test("cosineNearDups finds the near-parallel pair only") {
     val pairs = Similarity.cosineNearDups(vecs, threshold = 0.99)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
