@@ -16,7 +16,16 @@ import org.apache.spark.sql.SparkSession
   *   - `spark.sql.shuffle.partitions` = cores for the local harness
   *     (Spark's 200 default serializes small stages; a cluster deployment
   *     passes its own value or relies on AQE coalescing);
-  *   - no UI (headless harness).
+  *   - no UI (headless harness);
+  *   - `file:` paths resolve to `graft.NioLocalFileSystem`, which sets
+  *     permissions on written files through NIO instead of one `chmod`
+  *     process each where Hadoop's native library is absent. An
+  *     `extraConf` entry for `spark.hadoop.fs.file.impl` replaces it.
+  *     Both take effect only when this call creates the SparkContext,
+  *     and only if no `file:` file system was opened earlier in the JVM
+  *     (Hadoop caches one instance per scheme and user); a SparkContext
+  *     made outside the factory (spark-shell, a notebook) keeps Hadoop's
+  *     default.
   */
 object SparkSessionFactory {
 
@@ -34,6 +43,8 @@ object SparkSessionFactory {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[NioLocalFileSystem].getName)
     val s = extraConf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)

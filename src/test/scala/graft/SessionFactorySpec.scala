@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
+
 class SessionFactorySpec extends SparkTestBase {
 
   test("factory pins UTC and shuffle partitions on the session it returns") {
@@ -21,6 +23,29 @@ class SessionFactorySpec extends SparkTestBase {
     val s = SparkSessionFactory.create(
       extraConf = Map("spark.sql.graft.test.flag" -> "on"))
     assert(s.conf.get("spark.sql.graft.test.flag") === "on")
+  }
+
+  test("session writes resolve the NIO local file system; an extraConf " +
+      "fs.file.impl is applied after it") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fs")
+    try {
+      val fs = new Path(tmp.toUri)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.getClass === classOf[NioLocalFileSystem])
+    } finally java.nio.file.Files.delete(tmp)
+    // an override reaches Hadoop only in a session that creates the
+    // SparkContext and opens `file:` first in the JVM; the shared session
+    // already did both, so the builder order is checked as a conf value
+    val key = "spark.hadoop.fs.file.impl"
+    val installed = spark.conf.getOption(key)
+    val s = SparkSessionFactory.create(
+      extraConf = Map(key -> classOf[LocalFileSystem].getName))
+    try {
+      assert(s.conf.get(key) === classOf[LocalFileSystem].getName)
+    } finally installed match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
   }
 
   test("Verify rejects a wrong argument count with its usage line") {
