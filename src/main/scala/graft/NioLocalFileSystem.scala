@@ -1,11 +1,15 @@
 package graft
 
 import java.io.FileNotFoundException
+import java.net.URI
 import java.nio.file.{Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local file system (`.crc` files kept) whose raw
@@ -24,9 +28,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   * bits goes to the stock shell path; symlinks are followed, as `chmod`
   * follows them; a missing path raises `FileNotFoundException`.
   *
-  * Not covered: `FileContext` writers (Spark's streaming checkpoint
-  * manager) resolve `fs.AbstractFileSystem.file.impl`, Hadoop's
-  * `RawLocalFs`, and still set permissions the stock way.
+  * `FileContext` writers (Spark's streaming checkpoints and file-sink
+  * metadata logs) resolve `fs.AbstractFileSystem.file.impl` instead;
+  * [[NioLocalFs]] is the same raw layer in that API's shape, and
+  * `SparkSessionFactory` installs it there.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
@@ -54,5 +59,29 @@ object NioLocalFileSystem {
         }
       }
     }
+  }
+}
+
+/** `file:` for `FileContext`: Hadoop's `LocalFs` (a checksummed
+  * `ChecksumFs` over the `DelegateToFileSystem` `RawLocalFs`) with
+  * [[NioLocalFileSystem.Raw]] as the delegate, so streaming checkpoint
+  * and sink-log writes set permissions through NIO too. Like `LocalFs`,
+  * it serves `file:///` whatever URI it is constructed with. */
+class NioLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new NioLocalFs.Raw(conf))
+
+object NioLocalFs {
+
+  /** Hadoop's `RawLocalFs` over the NIO raw file system. */
+  class Raw(conf: Configuration) extends DelegateToFileSystem(
+      FsConstants.LOCAL_FS_URI, new NioLocalFileSystem.Raw, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults
+    override def getServerDefaults: FsServerDefaults =
+      LocalConfigKeys.getServerDefaults
+    // local paths may hold names HDFS rejects (':' in a component)
+    override def isValidName(src: String): Boolean = true
   }
 }

@@ -25,7 +25,11 @@ import org.apache.spark.sql.SparkSession
   *     and only if no `file:` file system was opened earlier in the JVM
   *     (Hadoop caches one instance per scheme and user); a SparkContext
   *     made outside the factory (spark-shell, a notebook) keeps Hadoop's
-  *     default.
+  *     default;
+  *   - `FileContext` `file:` paths (streaming checkpoints, file-sink
+  *     metadata logs) resolve to `graft.NioLocalFs`, the same NIO raw
+  *     layer. Hadoop builds these per call, uncached, so a session conf
+  *     `fs.AbstractFileSystem.file.impl` also replaces it per query.
   */
 object SparkSessionFactory {
 
@@ -45,6 +49,8 @@ object SparkSessionFactory {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl",
         classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
     val s = extraConf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)

@@ -137,17 +137,7 @@ object Graphs {
     var ranks = nodesCp.crossJoin(broadcast(nDf))
       .selectExpr("node", s"${Scale}L div __n as rank", "__n")
     for (i <- 1 to iterations) {
-      val share = ranks.select("node", "rank")
-        .join(degCp, col("node") === col("src"))
-        .selectExpr("src as u", "rank div deg as share")
-      val contrib = e.join(share, col("src") === col("u"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share") * col("w")).as("contrib"))
-      val dang = ranks.select("node", "rank")
-        .join(degCp, col("node") === col("src"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0L)).as("__mass"))
-      ranks = ranks.select("node", "__n").crossJoin(broadcast(dang))
-        .join(contrib, Seq("node"), "left")
+      ranks = pageRankStep(e, degCp, ranks, "__n")
         .selectExpr("node",
           s"(${100L - dampingPct}L * ${Scale}L) div (100L * __n)" +
             s" + (${dampingPct}L * (coalesce(contrib, 0L) + __mass div __n))" +
@@ -157,6 +147,27 @@ object Graphs {
     }
     ranks.select(col("node"), col("rank").as("rank_fp"),
       (col("rank").cast("double") / Scale.toDouble).as("rank"))
+  }
+
+  /** One PageRank superstep's inputs, joined onto `ranks` (node, rank,
+    * `carry`) as (node, `carry`, `__mass`, `contrib`): `contrib` is
+    * Σ share·w over the node's in-edges, with share = rank div Σw_out
+    * (`deg`: src, deg), NULL when no edge reaches it; `__mass` is the
+    * dangling mass, the rank summed over nodes with no out-edge. Each
+    * caller turns these into its next rank. */
+  private def pageRankStep(e: DataFrame, deg: DataFrame, ranks: DataFrame,
+                           carry: String): DataFrame = {
+    val share = ranks.select("node", "rank")
+      .join(deg, col("node") === col("src"))
+      .selectExpr("src as u", "rank div deg as share")
+    val contrib = e.join(share, col("src") === col("u"))
+      .groupBy(col("dst").as("node"))
+      .agg(sum(col("share") * col("w")).as("contrib"))
+    val dang = ranks.select("node", "rank")
+      .join(deg, col("node") === col("src"), "left_anti")
+      .agg(coalesce(sum("rank"), lit(0L)).as("__mass"))
+    ranks.select("node", carry).crossJoin(broadcast(dang))
+      .join(contrib, Seq("node"), "left")
   }
 
   /** Personalized (seed-biased) PageRank — the TrustRank curation
@@ -206,17 +217,7 @@ object Graphs {
         s"case when coalesce(__s, false) then ${Scale}L div ${nSeeds}L" +
           " else 0L end as rank")
     for (i <- 1 to iterations) {
-      val share = ranks.select("node", "rank")
-        .join(deg, col("node") === col("src"))
-        .selectExpr("src as u", "rank div deg as share")
-      val contrib = e.join(share, col("src") === col("u"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share") * col("w")).as("contrib"))
-      val dang = ranks.select("node", "rank")
-        .join(deg, col("node") === col("src"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0L)).as("__mass"))
-      ranks = ranks.select("node", "__seed").crossJoin(broadcast(dang))
-        .join(contrib, Seq("node"), "left")
+      ranks = pageRankStep(e, deg, ranks, "__seed")
         .selectExpr("node", "__seed",
           "case when __seed then " +
             s"(${100L - dampingPct}L * ${Scale}L) div (100L * ${nSeeds}L)" +

@@ -1,18 +1,32 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions (with whole-stage codegen) for the hot math
-  * in the similarity / dedup operators. Each replaces an interpreted
-  * higher-order-function pipeline with a single tight loop that runs inside
-  * the generated stage — the preference order the engine follows: built-in
-  * functions, then native `Expression` with `doGenCode`, and only then
-  * anything slower (SURVEY.md §7.3).
+/** Native Catalyst expressions for the hot math in the similarity /
+  * dedup operators. Each replaces an interpreted higher-order-function
+  * pipeline with a single tight loop that runs inside the generated
+  * stage — the preference order the engine follows: built-in
+  * functions, then a native `Expression`, and only then anything slower
+  * (SURVEY.md §7.3).
+  *
+  * One kernel per expression: the computation is written once, as a
+  * typed Scala method on the expression's companion. `nullSafeEval`
+  * calls it, and `doGenCode` emits one call to it, so the interpreted
+  * and generated paths agree by construction while the per-row call
+  * stays fused inside the whole-stage generated stage (the same shape
+  * Spark's own intrinsics use). Bound model state (PQ codebooks,
+  * top-cell centroids) lives on the expression and is passed to the
+  * kernel — as `addReferenceObj` references in generated code. Scratch
+  * buffers are `addMutableState` fields, allocated once per generated
+  * class and passed in; the interpreted path allocates them per call.
+  * [[FloatDot]] and [[PqAdcScore]] return a nullable primitive: their
+  * NULL rule is a separate `isNull` kernel, so no result is boxed.
   *
   * Numeric contracts:
   *   - [[FloatDot]] accumulates in Double in index order — bit-identical to
@@ -23,7 +37,43 @@ import org.apache.spark.sql.types._
   */
 object VectorExprs {
 
-  private val X = "org.apache.spark.sql.catalyst.expressions.XXH64"
+  /** A Scala object as generated Java source names it: its module
+    * instance, through which generated code calls the kernels. */
+  private def module(o: AnyRef): String = o.getClass.getName + ".MODULE$"
+
+  /** The shingle separator, shared by every call. */
+  private val Space = UTF8String.fromString(" ")
+
+  /** concat_ws(" ", tokens[from ..< until]): a NULL token is skipped, the
+    * same rule as the concat_ws formulation the shingle hashes mirror. */
+  private def joinWindow(tokens: ArrayData, from: Int, until: Int): UTF8String = {
+    val parts = new Array[UTF8String](until - from)
+    var i = from
+    while (i < until) {
+      parts(i - from) = if (tokens.isNullAt(i)) null else tokens.getUTF8String(i)
+      i += 1
+    }
+    UTF8String.concatWs(Space, parts: _*)
+  }
+
+  /** mins[i] = min(mins[i], XXH64(base, seed = i)) for every i. */
+  private def foldMin(mins: Array[Long], base: Long): Unit = {
+    var i = 0
+    while (i < mins.length) {
+      val h = XXH64.hashLong(base, i.toLong)
+      if (h < mins(i)) mins(i) = h
+      i += 1
+    }
+  }
+
+  /** A vector [[PqEncode]] / [[PqAdcTable]] accepts: exactly `len`
+    * elements, none NULL. */
+  private def wellFormed(v: ArrayData, len: Int): Boolean = {
+    if (v.numElements() != len) return false
+    var i = 0
+    while (i < len) { if (v.isNullAt(i)) return false; i += 1 }
+    true
+  }
 
   /** Dot product of two float-array columns, accumulated in Double in
     * index order.
@@ -48,52 +98,36 @@ object VectorExprs {
 
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != y.numElements()) return null
-      var s = 0.0; var i = 0
-      while (i < n) {
-        if (x.isNullAt(i) || y.isNullAt(i)) return null
-        s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1
-      }
-      s
+      if (FloatDot.isNull(x, y)) null else FloatDot.dot(x, y)
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  double $s = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |    $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-           |  }
-           |  if (!${ev.isNull}) ${ev.value} = $s;
-           |}
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.isNull} = ${module(FloatDot)}" +
+        s".isNull($a, $b); if (!${ev.isNull}) ${ev.value} = ${module(FloatDot)}.dot($a, $b);")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
   }
 
-  /** Unscaled (×10⁹) DECIMAL(·,9) value of `round(x, 9)` exactly as the
-    * Spark pipeline `cast(round(x, 9) as decimal(28,9))` computes it:
-    * Round on DoubleType goes BigDecimal.valueOf(x).setScale(9, HALF_UP)
-    * .toDouble, and the Cast re-rounds that double's shortest decimal
-    * rendering back to scale 9 — which is the same k·10⁻⁹ (two decimals
-    * a full 10⁻⁹ apart cannot share a double at |x| ≤ 1, so the shortest
-    * round-tripping rendering of the rounded double IS k·10⁻⁹). Called
-    * from [[DotRound9]]'s generated code. */
-  def round9Unscaled(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(9, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
+  object FloatDot {
+    /** The fold's NULL rule: unequal lengths or a NULL element. */
+    def isNull(x: ArrayData, y: ArrayData): Boolean = {
+      val n = x.numElements()
+      if (n != y.numElements()) return true
+      var i = 0
+      while (i < n) { if (x.isNullAt(i) || y.isNullAt(i)) return true; i += 1 }
+      false
+    }
+
+    /** Σ x[i]·y[i] in Double, index order, where [[isNull]] is false. */
+    def dot(x: ArrayData, y: ArrayData): Double = {
+      val n = x.numElements()
+      var s = 0.0; var i = 0
+      while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+      s
+    }
+  }
 
   /** Exact sparse dot product with per-term 9-decimal rounding — the
     * verification kernel of [[graft.operators.Dedup.allPairsCosine]]:
@@ -104,11 +138,11 @@ object VectorExprs {
     * sum sits far inside long range) and rendered to double the way
     * Decimal(38,9).toDouble renders it. Bit-identical to
     * `sum(cast(round(w_a*w_b, 9) as decimal(28,9))).cast("double")`
-    * over the joined shared-term rows — see [[round9Unscaled]] — while
-    * replacing the |candidates|×|doc| row fan-out and its pair-keyed
-    * aggregate exchange with ONE two-pointer merge per candidate pair
-    * (r20; measured 60–80 CPU-s → ~2 CPU-s at sf0.1). NULL on null
-    * input, like every expression here. */
+    * over the joined shared-term rows — see [[DotRound9.round9Unscaled]]
+    * — while replacing the |candidates|×|doc| row fan-out and its
+    * pair-keyed aggregate exchange with ONE two-pointer merge per
+    * candidate pair (r20; measured 60–80 CPU-s → ~2 CPU-s at sf0.1).
+    * NULL on null input, like every expression here. */
   case class DotRound9(left: Expression, right: Expression)
       extends BinaryExpression with ExpectsInputTypes {
     private val entry = StructType(Seq(
@@ -119,8 +153,32 @@ object VectorExprs {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "graft_dot_round9"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+    override def nullSafeEval(a: Any, b: Any): Any =
+      DotRound9.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = ${module(DotRound9)}.dot($a, $b);")
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  object DotRound9 {
+    /** Unscaled (×10⁹) DECIMAL(·,9) value of `round(x, 9)` exactly as the
+      * Spark pipeline `cast(round(x, 9) as decimal(28,9))` computes it:
+      * Round on DoubleType goes BigDecimal.valueOf(x).setScale(9, HALF_UP)
+      * .toDouble, and the Cast re-rounds that double's shortest decimal
+      * rendering back to scale 9 — which is the same k·10⁻⁹ (two decimals
+      * a full 10⁻⁹ apart cannot share a double at |x| ≤ 1, so the shortest
+      * round-tripping rendering of the rounded double IS k·10⁻⁹). */
+    def round9Unscaled(x: Double): Long =
+      java.math.BigDecimal.valueOf(x)
+        .setScale(9, java.math.RoundingMode.HALF_UP)
+        .unscaledValue().longValueExact()
+
+    def dot(x: ArrayData, y: ArrayData): Double = {
       val n = x.numElements(); val m = y.numElements()
       var i = 0; var j = 0; var sum = 0L
       while (i < n && j < m) {
@@ -136,42 +194,7 @@ object VectorExprs {
       new java.math.BigDecimal(java.math.BigInteger.valueOf(sum), 9)
         .doubleValue()
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val m = ctx.freshName("m")
-        val i = ctx.freshName("i"); val j = ctx.freshName("j")
-        val sum = ctx.freshName("sum")
-        val xr = ctx.freshName("xr"); val yr = ctx.freshName("yr")
-        val tx = ctx.freshName("tx"); val ty = ctx.freshName("ty")
-        val V = "org.apache.spark.sql.graft.VectorExprs"
-        s"""
-           |int $n = $a.numElements(); int $m = $b.numElements();
-           |int $i = 0; int $j = 0; long $sum = 0L;
-           |while ($i < $n && $j < $m) {
-           |  InternalRow $xr = $a.getStruct($i, 2);
-           |  InternalRow $yr = $b.getStruct($j, 2);
-           |  long $tx = $xr.getLong(0); long $ty = $yr.getLong(0);
-           |  if ($tx < $ty) { $i++; }
-           |  else if ($tx > $ty) { $j++; }
-           |  else {
-           |    $sum += $V.round9Unscaled($xr.getDouble(1) * $yr.getDouble(1));
-           |    $i++; $j++;
-           |  }
-           |}
-           |${ev.value} = new java.math.BigDecimal(
-           |  java.math.BigInteger.valueOf($sum), 9).doubleValue();
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
   }
-
-  def dotRound9(a: Column, b: Column): Column =
-    ExprBridge.column(
-      DotRound9(ExprBridge.expression(a), ExprBridge.expression(b)))
 
   /** 64-bit SimHash of a string-array (token) column: per token hash, bit i
     * contributes +1/-1 to counter i; output bit i is sign(counter i). One
@@ -182,13 +205,28 @@ object VectorExprs {
     override def dataType: DataType = LongType
     override def prettyName: String = "graft_simhash64"
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val counts = new Array[Int](64)
+    override def nullSafeEval(input: Any): Any =
+      SimHash64.simhash(input.asInstanceOf[ArrayData], new Array[Int](64))
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val counts = ctx.addMutableState("int[]", "simhashCounts",
+        v => s"$v = new int[64];")
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(SimHash64)}.simhash($a, $counts);")
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object SimHash64 {
+    /** `counts` is 64-slot scratch, overwritten. */
+    def simhash(tokens: ArrayData, counts: Array[Int]): Long = {
+      java.util.Arrays.fill(counts, 0)
       var j = 0
-      while (j < arr.numElements()) {
-        if (!arr.isNullAt(j)) {
-          val h = XXH64.hashUTF8String(arr.getUTF8String(j), 42L)
+      while (j < tokens.numElements()) {
+        if (!tokens.isNullAt(j)) {
+          val h = XXH64.hashUTF8String(tokens.getUTF8String(j), 42L)
           var i = 0
           while (i < 64) {
             counts(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1
@@ -200,34 +238,6 @@ object VectorExprs {
       while (i < 64) { if (counts(i) > 0) sig |= (1L << i); i += 1 }
       sig
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val counts = ctx.addMutableState("int[]", "simhashCounts",
-        v => s"$v = new int[64];")
-      nullSafeCodeGen(ctx, ev, a => {
-        val j = ctx.freshName("j"); val i = ctx.freshName("i")
-        val h = ctx.freshName("h"); val sig = ctx.freshName("sig")
-        s"""
-           |java.util.Arrays.fill($counts, 0);
-           |for (int $j = 0; $j < $a.numElements(); $j++) {
-           |  if (!$a.isNullAt($j)) {
-           |    long $h = $X.hashUTF8String($a.getUTF8String($j), 42L);
-           |    for (int $i = 0; $i < 64; $i++) {
-           |      $counts[$i] += ((($h >>> $i) & 1L) == 1L) ? 1 : -1;
-           |    }
-           |  }
-           |}
-           |long $sig = 0L;
-           |for (int $i = 0; $i < 64; $i++) {
-           |  if ($counts[$i] > 0) $sig |= (1L << $i);
-           |}
-           |${ev.value} = $sig;
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** MinHash signature of a string-array (shingle) column: one base XXH64
@@ -241,50 +251,33 @@ object VectorExprs {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "graft_minhash_sig"
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val mins = Array.fill[Long](numHashes)(Long.MaxValue)
-      var j = 0
-      while (j < arr.numElements()) {
-        if (!arr.isNullAt(j)) {
-          val base = XXH64.hashUTF8String(arr.getUTF8String(j), 42L)
-          var i = 0
-          while (i < numHashes) {
-            val h = XXH64.hashLong(base, i.toLong)
-            if (h < mins(i)) mins(i) = h
-            i += 1
-          }
-        }
-        j += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(mins)
-    }
+    override def nullSafeEval(input: Any): Any =
+      MinHashSig.signature(input.asInstanceOf[ArrayData], new Array[Long](numHashes))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val mins = ctx.addMutableState("long[]", "minhashMins",
         v => s"$v = new long[$numHashes];")
-      nullSafeCodeGen(ctx, ev, a => {
-        val j = ctx.freshName("j"); val i = ctx.freshName("i")
-        val base = ctx.freshName("base"); val h = ctx.freshName("h")
-        s"""
-           |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-           |for (int $j = 0; $j < $a.numElements(); $j++) {
-           |  if (!$a.isNullAt($j)) {
-           |    long $base = $X.hashUTF8String($a.getUTF8String($j), 42L);
-           |    for (int $i = 0; $i < $numHashes; $i++) {
-           |      long $h = $X.hashLong($base, (long) $i);
-           |      if ($h < $mins[$i]) $mins[$i] = $h;
-           |    }
-           |  }
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($mins);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(MinHashSig)}.signature($a, $mins);")
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  object MinHashSig {
+    /** `mins` is the scratch signature (its length is the hash count),
+      * overwritten; the result is a copy. */
+    def signature(shingles: ArrayData, mins: Array[Long]): ArrayData = {
+      java.util.Arrays.fill(mins, Long.MaxValue)
+      var j = 0
+      while (j < shingles.numElements()) {
+        if (!shingles.isNullAt(j))
+          foldMin(mins, XXH64.hashUTF8String(shingles.getUTF8String(j), 42L))
+        j += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(mins)
+    }
   }
 
   /** Random-hyperplane LSH signature of a float-vector column: bit p =
@@ -298,8 +291,19 @@ object VectorExprs {
     override def dataType: DataType = LongType
     override def prettyName: String = "graft_lsh_sign64"
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
+    override def nullSafeEval(input: Any): Any =
+      LshSign64.sign(input.asInstanceOf[ArrayData], numPlanes)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(LshSign64)}.sign($a, $numPlanes);")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object LshSign64 {
+    def sign(v: ArrayData, numPlanes: Int): Long = {
       val n = v.numElements()
       var sig = 0L
       var p = 0
@@ -316,31 +320,6 @@ object VectorExprs {
       }
       sig
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val n = ctx.freshName("n"); val p = ctx.freshName("p")
-        val i = ctx.freshName("i"); val seed = ctx.freshName("seed")
-        val dot = ctx.freshName("dot"); val comp = ctx.freshName("comp")
-        val sig = ctx.freshName("sig")
-        s"""
-           |int $n = $a.numElements();
-           |long $sig = 0L;
-           |for (int $p = 0; $p < $numPlanes; $p++) {
-           |  long $seed = $X.hashInt($p, 42L);
-           |  double $dot = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $comp = (double) $X.hashInt($i, $seed) / (double) Long.MAX_VALUE;
-           |    $dot += (double) $a.getFloat($i) * $comp;
-           |  }
-           |  if ($dot > 0) $sig |= (1L << $p);
-           |}
-           |${ev.value} = $sig;
-         """.stripMargin
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** Cosine similarity of two float-array columns in ONE pass: dot,
@@ -355,8 +334,20 @@ object VectorExprs {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "graft_cosine"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+    override def nullSafeEval(a: Any, b: Any): Any =
+      CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = ${module(CosineSim)}.cosine($a, $b);")
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  object CosineSim {
+    def cosine(x: ArrayData, y: ArrayData): Double = {
       val n = math.min(x.numElements(), y.numElements())
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < n) {
@@ -365,37 +356,15 @@ object VectorExprs {
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $xv = (double) $a.getFloat($i);
-           |  double $yv = (double) $b.getFloat($i);
-           |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-           |}
-           |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
   }
 
   /** Word n-gram shingle hashes of a token array: out[j] =
     * XXH64(concat_ws(" ", tokens[j ..< min(j+n, len)]), seed=42) for
     * j in 0 .. max(len - n, 0). Hash values equal
     * `xxhash64(concat_ws(" ", slice(tokens, j+1, n)))` — the built-in
-    * formulation this replaces — but the whole loop lives in one
-    * codegen'd expression instead of nested interpreted higher-order
-    * functions (transform + slice + concat_ws per shingle). */
+    * formulation this replaces — but the whole loop is one kernel call
+    * instead of nested interpreted higher-order functions (transform +
+    * slice + concat_ws per shingle). */
   case class ShingleHash64(child: Expression, n: Int)
       extends UnaryExpression with ExpectsInputTypes {
     require(n > 0)
@@ -403,63 +372,31 @@ object VectorExprs {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "graft_shingle_hash"
 
-    private val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
+    override def nullSafeEval(input: Any): Any =
+      ShingleHash64.hashes(input.asInstanceOf[ArrayData], n)
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val m = arr.numElements()
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(ShingleHash64)}.hashes($a, $n);")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object ShingleHash64 {
+    def hashes(tokens: ArrayData, n: Int): ArrayData = {
+      val m = tokens.numElements()
       // No tokens → no shingles. Without this, every empty input would
       // share the hash of the empty string — a degenerate LSH bucket.
       val cnt = if (m == 0) 0 else math.max(m - n, 0) + 1
       val out = new Array[Long](cnt)
       var j = 0
       while (j < cnt) {
-        val end = math.min(j + n, m)
-        val parts = new Array[org.apache.spark.unsafe.types.UTF8String](end - j)
-        var i = j
-        while (i < end) {
-          // null stays null: UTF8String.concatWs skips null inputs, the
-          // same rule as the concat_ws formulation these hashes mirror
-          parts(i - j) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
-          i += 1
-        }
-        out(j) = XXH64.hashUTF8String(
-          org.apache.spark.unsafe.types.UTF8String.concatWs(sep, parts: _*), 42L)
+        out(j) = XXH64.hashUTF8String(joinWindow(tokens, j, math.min(j + n, m)), 42L)
         j += 1
       }
       UnsafeArrayData.fromPrimitiveArray(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      val sepRef = ctx.addMutableState(u, "shingleSep",
-        v => s"""$v = $u.fromString(" ");""")
-      nullSafeCodeGen(ctx, ev, a => {
-        val m = ctx.freshName("m"); val cnt = ctx.freshName("cnt")
-        val out = ctx.freshName("out"); val j = ctx.freshName("j")
-        val end = ctx.freshName("end"); val parts = ctx.freshName("parts")
-        val i = ctx.freshName("i")
-        s"""
-           |int $m = $a.numElements();
-           |int $cnt = ($m == 0) ? 0 : java.lang.Math.max($m - $n, 0) + 1;
-           |long[] $out = new long[$cnt];
-           |for (int $j = 0; $j < $cnt; $j++) {
-           |  int $end = java.lang.Math.min($j + $n, $m);
-           |  $u[] $parts = new $u[$end - $j];
-           |  for (int $i = $j; $i < $end; $i++) {
-           |    $parts[$i - $j] = $a.isNullAt($i)
-           |      ? null : $a.getUTF8String($i);
-           |  }
-           |  $out[$j] = $X.hashUTF8String($u.concatWs($sepRef, $parts), 42L);
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($out);
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** MinHash signature over pre-hashed shingles: signature[i] = min over
@@ -473,50 +410,31 @@ object VectorExprs {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "graft_minhash_from_hashes"
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val mins = Array.fill[Long](numHashes)(Long.MaxValue)
-      var j = 0
-      while (j < arr.numElements()) {
-        if (!arr.isNullAt(j)) {
-          val base = arr.getLong(j)
-          var i = 0
-          while (i < numHashes) {
-            val h = XXH64.hashLong(base, i.toLong)
-            if (h < mins(i)) mins(i) = h
-            i += 1
-          }
-        }
-        j += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(mins)
-    }
+    override def nullSafeEval(input: Any): Any =
+      MinHashFromHashes.signature(input.asInstanceOf[ArrayData], new Array[Long](numHashes))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val mins = ctx.addMutableState("long[]", "minhashHMins",
         v => s"$v = new long[$numHashes];")
-      nullSafeCodeGen(ctx, ev, a => {
-        val j = ctx.freshName("j"); val i = ctx.freshName("i")
-        val base = ctx.freshName("base"); val h = ctx.freshName("h")
-        s"""
-           |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-           |for (int $j = 0; $j < $a.numElements(); $j++) {
-           |  if (!$a.isNullAt($j)) {
-           |    long $base = $a.getLong($j);
-           |    for (int $i = 0; $i < $numHashes; $i++) {
-           |      long $h = $X.hashLong($base, (long) $i);
-           |      if ($h < $mins[$i]) $mins[$i] = $h;
-           |    }
-           |  }
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($mins);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(MinHashFromHashes)}.signature($a, $mins);")
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  object MinHashFromHashes {
+    /** `mins` as in [[MinHashSig.signature]]. */
+    def signature(hashes: ArrayData, mins: Array[Long]): ArrayData = {
+      java.util.Arrays.fill(mins, Long.MaxValue)
+      var j = 0
+      while (j < hashes.numElements()) {
+        if (!hashes.isNullAt(j)) foldMin(mins, hashes.getLong(j))
+        j += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(mins)
+    }
   }
 
   /** LSH band hashes of a minhash signature: out[b] = fold of
@@ -530,50 +448,38 @@ object VectorExprs {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "graft_band_hashes"
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
+    override def nullSafeEval(input: Any): Any =
+      BandHashes64.bandHashes(input.asInstanceOf[ArrayData], bands, r)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(BandHashes64)}.bandHashes($a, $bands, $r);")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object BandHashes64 {
+    def bandHashes(sig: ArrayData, bands: Int, r: Int): ArrayData = {
       val out = new Array[Long](bands)
       var b = 0
       while (b < bands) {
         var h = 42L
         var i = b * r
-        val end = math.min((b + 1) * r, arr.numElements())
-        while (i < end) { h = XXH64.hashLong(arr.getLong(i), h); i += 1 }
+        val end = math.min((b + 1) * r, sig.numElements())
+        while (i < end) { h = XXH64.hashLong(sig.getLong(i), h); i += 1 }
         out(b) = h
         b += 1
       }
       UnsafeArrayData.fromPrimitiveArray(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val out = ctx.freshName("out"); val b = ctx.freshName("b")
-        val h = ctx.freshName("h"); val i = ctx.freshName("i")
-        val end = ctx.freshName("end")
-        s"""
-           |long[] $out = new long[$bands];
-           |for (int $b = 0; $b < $bands; $b++) {
-           |  long $h = 42L;
-           |  int $end = java.lang.Math.min(($b + 1) * $r, $a.numElements());
-           |  for (int $i = $b * $r; $i < $end; $i++) {
-           |    $h = $X.hashLong($a.getLong($i), $h);
-           |  }
-           |  $out[$b] = $h;
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($out);
-         """.stripMargin
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** Word n-gram shingle STRINGS of a token array — full windows only:
     * out[j] = concat_ws(" ", tokens[j ..< j+n]) for j in 0 .. len-n, and
     * an empty array when len < n. The string twin of [[ShingleHash64]],
     * for operators whose output IS the n-gram (frequency tables); one
-    * codegen'd loop instead of interpreted transform + slice + concat_ws
+    * kernel call instead of interpreted transform + slice + concat_ws
     * per window. */
   case class ShingleStrings(child: Expression, n: Int)
       extends UnaryExpression with ExpectsInputTypes {
@@ -582,62 +488,32 @@ object VectorExprs {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def prettyName: String = "graft_shingle_strings"
 
-    private val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
+    override def nullSafeEval(input: Any): Any =
+      ShingleStrings.strings(input.asInstanceOf[ArrayData], n)
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val m = arr.numElements()
-      val cnt = if (m < n) 0 else m - n + 1
-      val out = new Array[AnyRef](cnt)
-      var j = 0
-      while (j < cnt) {
-        val parts = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-        var i = 0
-        while (i < n) {
-          // null stays null — concatWs skips it, matching concat_ws
-          parts(i) = if (arr.isNullAt(j + i)) null else arr.getUTF8String(j + i)
-          i += 1
-        }
-        out(j) = org.apache.spark.unsafe.types.UTF8String.concatWs(sep, parts: _*)
-        j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      val sepRef = ctx.addMutableState(u, "shingleStrSep",
-        v => s"""$v = $u.fromString(" ");""")
-      nullSafeCodeGen(ctx, ev, a => {
-        val m = ctx.freshName("m"); val cnt = ctx.freshName("cnt")
-        val out = ctx.freshName("out"); val j = ctx.freshName("j")
-        val parts = ctx.freshName("parts"); val i = ctx.freshName("i")
-        s"""
-           |int $m = $a.numElements();
-           |int $cnt = ($m < $n) ? 0 : $m - $n + 1;
-           |Object[] $out = new Object[$cnt];
-           |for (int $j = 0; $j < $cnt; $j++) {
-           |  $u[] $parts = new $u[$n];
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    $parts[$i] = $a.isNullAt($j + $i)
-           |      ? null : $a.getUTF8String($j + $i);
-           |  }
-           |  $out[$j] = $u.concatWs($sepRef, $parts);
-           |}
-           |${ev.value} =
-           |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(ShingleStrings)}.strings($a, $n);")
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
+  object ShingleStrings {
+    def strings(tokens: ArrayData, n: Int): ArrayData = {
+      val m = tokens.numElements()
+      val cnt = if (m < n) 0 else m - n + 1
+      val out = new Array[AnyRef](cnt)
+      var j = 0
+      while (j < cnt) { out(j) = joinWindow(tokens, j, j + n); j += 1 }
+      new GenericArrayData(out)
+    }
+  }
+
   /** Polynomial rolling hash over a string's UTF-16 characters:
     * h = fold(h * 31 + char) mod 1e9+7 — bit-identical to the
     * `aggregate(split(text, ""), ...)` HOF chain it replaces for BMP
-    * text; one codegen'd loop instead of a per-character interpreted
+    * text; one kernel call instead of a per-character interpreted
     * fold. */
   case class PolyHash(child: Expression)
       extends UnaryExpression with ExpectsInputTypes {
@@ -645,95 +521,34 @@ object VectorExprs {
     override def dataType: DataType = LongType
     override def prettyName: String = "graft_polyhash"
 
-    private val M = 1000000007L
-
-    override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
-      var h = 0L
-      var i = 0
-      while (i < s.length) { h = (h * 31 + s.charAt(i)) % M; i += 1 }
-      h
-    }
+    override def nullSafeEval(input: Any): Any =
+      PolyHash.hash(input.asInstanceOf[UTF8String])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val s = ctx.freshName("s"); val h = ctx.freshName("h")
-        val i = ctx.freshName("i")
-        s"""
-           |java.lang.String $s = $a.toString();
-           |long $h = 0L;
-           |for (int $i = 0; $i < $s.length(); $i++) {
-           |  $h = ($h * 31 + $s.charAt($i)) % ${M}L;
-           |}
-           |${ev.value} = $h;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = ${module(PolyHash)}.hash($a);")
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
-  /** Shared Jaro–Winkler kernel, reachable from generated code (the
-    * match/transposition loops need two scratch boolean arrays, so the
-    * implementation lives in ONE static JVM method that whole-stage
-    * codegen calls — the same shape Spark's own intrinsics use —
-    * rather than inlined array-allocating codegen).
-    *
-    * Semantics pinned to DuckDB's `jaro_winkler_similarity` (the
-    * correctness oracle): either side empty → 0.0 (even both-empty);
-    * match window ⌊max(len)/2⌋−1; transpositions = half the
-    * out-of-order matches; the Winkler prefix boost (ℓ ≤ 4, p = 0.1)
-    * applies only when the Jaro score exceeds 0.7. Comparison is by
-    * UTF-16 code unit — identical to DuckDB's per-character walk on
-    * BMP text. */
-  def jaroWinklerImpl(
-      aU: org.apache.spark.unsafe.types.UTF8String,
-      bU: org.apache.spark.unsafe.types.UTF8String): Double = {
-    val a = aU.toString; val b = bU.toString
-    val la = a.length; val lb = b.length
-    if (la == 0 || lb == 0) return 0.0
-    val window = math.max(math.max(la, lb) / 2 - 1, 0)
-    val ma = new Array[Boolean](la); val mb = new Array[Boolean](lb)
-    var m = 0
-    var i = 0
-    while (i < la) {
-      val hi = math.min(lb - 1, i + window)
-      var j = math.max(0, i - window)
-      var found = false
-      while (j <= hi && !found) {
-        if (!mb(j) && a.charAt(i) == b.charAt(j)) {
-          ma(i) = true; mb(j) = true; m += 1; found = true
-        }
-        j += 1
-      }
-      i += 1
-    }
-    if (m == 0) return 0.0
-    var t = 0; var k = 0
-    i = 0
-    while (i < la) {
-      if (ma(i)) {
-        while (!mb(k)) k += 1
-        if (a.charAt(i) != b.charAt(k)) t += 1
-        k += 1
-      }
-      i += 1
-    }
-    val md = m.toDouble
-    val jaro = (md / la + md / lb + (md - t / 2) / md) / 3.0
-    if (jaro <= 0.7) jaro
-    else {
-      val lim = math.min(4, math.min(la, lb))
-      var l = 0
-      while (l < lim && a.charAt(l) == b.charAt(l)) l += 1
-      jaro + l * 0.1 * (1.0 - jaro)
+  object PolyHash {
+    // a constant, inlined into `% M` like a literal (a plain val would
+    // be an accessor call and a division by an unknown divisor)
+    private final val M = 1000000007L
+
+    def hash(text: UTF8String): Long = {
+      val s = text.toString
+      var h = 0L
+      var i = 0
+      while (i < s.length) { h = (h * 31 + s.charAt(i)) % M; i += 1 }
+      h
     }
   }
 
   /** Jaro–Winkler similarity of two strings in [0, 1] — the record-
     * linkage comparator (names, addresses, titles) Spark lacks as a
-    * built-in; see [[jaroWinklerImpl]] for the pinned semantics. Used
-    * by the blocked fuzzy-match operators where edit distance
+    * built-in; see [[JaroWinkler.similarity]] for the pinned semantics.
+    * Used by the blocked fuzzy-match operators where edit distance
     * over-penalizes transposed tokens. */
   case class JaroWinkler(left: Expression, right: Expression)
       extends BinaryExpression with ExpectsInputTypes {
@@ -743,26 +558,73 @@ object VectorExprs {
     override def prettyName: String = "graft_jaro_winkler"
 
     override def nullSafeEval(a: Any, b: Any): Any =
-      jaroWinklerImpl(
-        a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+      JaroWinkler.similarity(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
 
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = org.apache.spark.sql.graft.VectorExprs" +
-          s".jaroWinklerImpl($a, $b);")
+        s"${ev.value} = ${module(JaroWinkler)}.similarity($a, $b);")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
   }
 
+  object JaroWinkler {
+    /** Semantics pinned to DuckDB's `jaro_winkler_similarity` (the
+      * correctness oracle): either side empty → 0.0 (even both-empty);
+      * match window ⌊max(len)/2⌋−1; transpositions = half the
+      * out-of-order matches; the Winkler prefix boost (ℓ ≤ 4, p = 0.1)
+      * applies only when the Jaro score exceeds 0.7. Comparison is by
+      * UTF-16 code unit — identical to DuckDB's per-character walk on
+      * BMP text. */
+    def similarity(aU: UTF8String, bU: UTF8String): Double = {
+      val a = aU.toString; val b = bU.toString
+      val la = a.length; val lb = b.length
+      if (la == 0 || lb == 0) return 0.0
+      val window = math.max(math.max(la, lb) / 2 - 1, 0)
+      val ma = new Array[Boolean](la); val mb = new Array[Boolean](lb)
+      var m = 0
+      var i = 0
+      while (i < la) {
+        val hi = math.min(lb - 1, i + window)
+        var j = math.max(0, i - window)
+        var found = false
+        while (j <= hi && !found) {
+          if (!mb(j) && a.charAt(i) == b.charAt(j)) {
+            ma(i) = true; mb(j) = true; m += 1; found = true
+          }
+          j += 1
+        }
+        i += 1
+      }
+      if (m == 0) return 0.0
+      var t = 0; var k = 0
+      i = 0
+      while (i < la) {
+        if (ma(i)) {
+          while (!mb(k)) k += 1
+          if (a.charAt(i) != b.charAt(k)) t += 1
+          k += 1
+        }
+        i += 1
+      }
+      val md = m.toDouble
+      val jaro = (md / la + md / lb + (md - t / 2) / md) / 3.0
+      if (jaro <= 0.7) jaro
+      else {
+        val lim = math.min(4, math.min(la, lb))
+        var l = 0
+        while (l < lim && a.charAt(l) == b.charAt(l)) l += 1
+        jaro + l * 0.1 * (1.0 - jaro)
+      }
+    }
+  }
+
   /** Shannon entropy (nats) of a string's BYTE distribution — the
     * gibberish / binary-spill / repeated-filler quality gate (low entropy
     * flags "aaaa…"-style filler and template spam; anomalously high flags
     * encoded binary). One pass over the bytes plus a fixed 256-slot
-    * histogram, fully inside whole-stage codegen — zero shuffle, scan-side
+    * histogram, called from whole-stage codegen — zero shuffle, scan-side
     * streamable at any corpus size.
     *
     * Engine-exact contract (the [[graft.operators.Profiling.distributionDrift]]
@@ -779,58 +641,38 @@ object VectorExprs {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "graft_byte_entropy"
 
-    override def nullSafeEval(input: Any): Any = {
-      val bytes =
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-      val n = bytes.length
-      if (n == 0) 0.0
-      else {
-        val counts = new Array[Long](256)
-        var i = 0
-        while (i < n) { counts(bytes(i) & 0xFF) += 1; i += 1 }
-        var sumNano = 0L
-        var b = 0
-        while (b < 256) {
-          val c = counts(b)
-          if (c > 0) sumNano += c * Math.round(Math.log(c.toDouble) * 1e9)
-          b += 1
-        }
-        (Math.round(Math.log(n.toDouble) * 1e9) - sumNano.toDouble / n) / 1e9
-      }
-    }
+    override def nullSafeEval(input: Any): Any =
+      ByteEntropy.entropy(input.asInstanceOf[UTF8String], new Array[Long](256))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val counts = ctx.addMutableState("long[]", "entropyCounts",
         v => s"$v = new long[256];")
-      nullSafeCodeGen(ctx, ev, a => {
-        val bytes = ctx.freshName("bytes"); val n = ctx.freshName("n")
-        val i = ctx.freshName("i"); val b = ctx.freshName("b")
-        val c = ctx.freshName("c"); val sumNano = ctx.freshName("sumNano")
-        s"""
-           |byte[] $bytes = $a.getBytes();
-           |int $n = $bytes.length;
-           |if ($n == 0) {
-           |  ${ev.value} = 0.0;
-           |} else {
-           |  java.util.Arrays.fill($counts, 0L);
-           |  for (int $i = 0; $i < $n; $i++) { $counts[$bytes[$i] & 0xFF]++; }
-           |  long $sumNano = 0L;
-           |  for (int $b = 0; $b < 256; $b++) {
-           |    long $c = $counts[$b];
-           |    if ($c > 0) {
-           |      $sumNano += $c * Math.round(Math.log((double) $c) * 1e9);
-           |    }
-           |  }
-           |  ${ev.value} =
-           |    (Math.round(Math.log((double) $n) * 1e9) - $sumNano / (double) $n)
-           |      / 1e9;
-           |}
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(ByteEntropy)}.entropy($a, $counts);")
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+  }
+
+  object ByteEntropy {
+    /** `counts` is the 256-slot scratch histogram, overwritten. */
+    def entropy(text: UTF8String, counts: Array[Long]): Double = {
+      val bytes = text.getBytes
+      val n = bytes.length
+      if (n == 0) return 0.0
+      java.util.Arrays.fill(counts, 0L)
+      var i = 0
+      while (i < n) { counts(bytes(i) & 0xFF) += 1; i += 1 }
+      var sumNano = 0L
+      var b = 0
+      while (b < 256) {
+        val c = counts(b)
+        if (c > 0) sumNano += c * Math.round(Math.log(c.toDouble) * 1e9)
+        b += 1
+      }
+      (Math.round(Math.log(n.toDouble) * 1e9) - sumNano.toDouble / n) / 1e9
+    }
   }
 
   /** Morton (Z-order) interleave of the low 32 bits of two long columns:
@@ -838,7 +680,7 @@ object VectorExprs {
     * space-filling-curve sort key behind `Sources.writeZOrdered` — rows
     * sorted by it cluster in BOTH dimensions, so min/max row-group stats
     * prune scans filtered on either column. Branch-free mask-cascade
-    * spreading, inside whole-stage codegen. */
+    * spreading, called from whole-stage codegen. */
   case class Interleave64(left: Expression, right: Expression)
       extends BinaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
@@ -848,25 +690,9 @@ object VectorExprs {
     override def nullSafeEval(a: Any, b: Any): Any =
       Interleave64.morton(a.asInstanceOf[Long], b.asInstanceOf[Long])
 
-    private def spreadJava(in: String, v: String): String =
-      s"""
-         |long $v = $in & 0xFFFFFFFFL;
-         |$v = ($v | ($v << 16)) & 0x0000FFFF0000FFFFL;
-         |$v = ($v | ($v << 8))  & 0x00FF00FF00FF00FFL;
-         |$v = ($v | ($v << 4))  & 0x0F0F0F0F0F0F0F0FL;
-         |$v = ($v | ($v << 2))  & 0x3333333333333333L;
-         |$v = ($v | ($v << 1))  & 0x5555555555555555L;
-       """.stripMargin
-
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val va = ctx.freshName("za"); val vb = ctx.freshName("zb")
-        s"""
-           |${spreadJava(a, va)}
-           |${spreadJava(b, vb)}
-           |${ev.value} = $va | ($vb << 1);
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = ${module(Interleave64)}.morton($a, $b);")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -898,7 +724,7 @@ object VectorExprs {
     * The rotation state is why this is a native expression and not a
     * column formula: as nested CASE columns the per-level frame rewrite
     * grows ~3× per level (CollapseProject inlines the chain), while
-    * here it is one constant-size loop inside whole-stage codegen.
+    * here it is one constant-size loop called from whole-stage codegen.
     * Inputs mask to the low `bits` bits (like [[Interleave64]] masks to
     * 32) — compose with `Layout.quantize`, which guarantees the domain. */
   case class HilbertD2(left: Expression, right: Expression, bits: Int)
@@ -906,7 +732,7 @@ object VectorExprs {
     // validated HERE, not only in Layout.hilbertValue: the SQL surface
     // (graft_hilbert) constructs the expression directly, and bits = 0
     // would silently shift by -1 (Java shift masking) while bits > 31
-    // would overflow s*s in the raw codegen loop
+    // would overflow s*s in the loop
     require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
     override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
     override def dataType: DataType = LongType
@@ -916,28 +742,8 @@ object VectorExprs {
       HilbertD2.xy2d(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val x = ctx.freshName("hx"); val y = ctx.freshName("hy")
-        val d = ctx.freshName("hd"); val s = ctx.freshName("hs")
-        val rx = ctx.freshName("hrx"); val ry = ctx.freshName("hry")
-        val t = ctx.freshName("ht")
-        val mask = (1L << bits) - 1
-        s"""
-           |long $x = $a & ${mask}L;
-           |long $y = $b & ${mask}L;
-           |long $d = 0L;
-           |for (long $s = 1L << ${bits - 1}; $s > 0; $s >>= 1) {
-           |  long $rx = (($x & $s) > 0) ? 1L : 0L;
-           |  long $ry = (($y & $s) > 0) ? 1L : 0L;
-           |  $d += $s * $s * ((3L * $rx) ^ $ry);
-           |  if ($ry == 0L) {
-           |    if ($rx == 1L) { $x = $s - 1L - $x; $y = $s - 1L - $y; }
-           |    long $t = $x; $x = $y; $y = $t;
-           |  }
-           |}
-           |${ev.value} = $d;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = ${module(HilbertD2)}.xy2d($a, $b, $bits);")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -964,13 +770,31 @@ object VectorExprs {
     }
   }
 
+  /** A float-vector expression with an m·ksub-centroid codebook bound
+    * in (j-major, code-minor): [[PqEncode]] and [[PqAdcTable]]. */
+  sealed trait BoundCodebook extends UnaryExpression with ExpectsInputTypes {
+    def m: Int
+    def ksub: Int
+    def cents: Seq[Seq[Float]]
+    require(m > 0 && ksub > 0 && cents.length == m * ksub,
+      s"codebook must hold m*ksub=${m * ksub} centroids")
+    override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
+    override def nullable: Boolean = true
+    // the bound codebook would otherwise dump m*ksub float arrays into
+    // every plan rendering
+    override def toString: String =
+      s"$prettyName($child, m=$m, ksub=$ksub, codebook=[bound])"
+    @transient protected lazy val cArr: Array[Array[Float]] =
+      cents.map(_.toArray).toArray
+  }
+
   /** Product-quantization encode: for each of `m` subspaces of a
     * float-vector column, the argmin-squared-L2 code against a codebook
     * BOUND INTO the expression (j-major, code-minor flat layout; the
     * codebook is model state, codebook-sized, so it rides the expression
-    * like LSH planes ride [[LshSign64]]). One tight loop per row, no
-    * explode/join/window anywhere — the scan-shaped encode a 10^11-vector
-    * corpus needs.
+    * and generated code holds it as a reference). One tight loop per
+    * row, no explode/join/window anywhere — the scan-shaped encode a
+    * 10^11-vector corpus needs.
     *
     * Numeric contract: d2 = dot(sub,sub) − 2·dot(sub,cent) + dot(cent,cent)
     * with every dot accumulated in Double in index order ([[FloatDot]]'s
@@ -979,45 +803,48 @@ object VectorExprs {
     * the LOWEST code (first minimum), matching a (d2 asc, code) sort.
     * A vector of the wrong length or holding a NULL element yields NULL. */
   case class PqEncode(child: Expression, m: Int, ksub: Int,
-                      cents: Seq[Seq[Float]])
-      extends UnaryExpression with ExpectsInputTypes {
-    require(m > 0 && ksub > 0 && cents.length == m * ksub,
-      s"codebook must hold m*ksub=${m * ksub} centroids")
-    override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
+                      cents: Seq[Seq[Float]]) extends BoundCodebook {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "graft_pq_encode"
 
-    // the bound codebook would otherwise dump m*ksub float arrays into
-    // every plan rendering
-    override def toString: String =
-      s"graft_pq_encode($child, m=$m, ksub=$ksub, codebook=[bound])"
-
-    @transient private lazy val cArr: Array[Array[Float]] =
-      cents.map(_.toArray).toArray
-    @transient private lazy val subdim: Int = cArr(0).length
     @transient private lazy val ccNorm: Array[Double] = cArr.map { c =>
       var s = 0.0; var i = 0
       while (i < c.length) { s += c(i).toDouble * c(i).toDouble; i += 1 }
       s
     }
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      if (v.numElements() != m * subdim) return null
-      var i = 0
-      while (i < m * subdim) { if (v.isNullAt(i)) return null; i += 1 }
+    override def nullSafeEval(input: Any): Any =
+      PqEncode.encode(input.asInstanceOf[ArrayData], cArr, ccNorm, m, ksub)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cRef = ctx.addReferenceObj("pqCents", cArr, "float[][]")
+      val ccRef = ctx.addReferenceObj("pqCc", ccNorm, "double[]")
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = ${module(PqEncode)}" +
+        s".encode($a, $cRef, $ccRef, $m, $ksub); ${ev.isNull} = ${ev.value} == null;")
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object PqEncode {
+    /** Codes of `v` against the j-major codebook `cents` (with its
+      * squared norms `ccNorm`), or null for a malformed vector. */
+    def encode(v: ArrayData, cents: Array[Array[Float]], ccNorm: Array[Double],
+               m: Int, ksub: Int): ArrayData = {
+      val subdim = cents(0).length
+      if (!wellFormed(v, m * subdim)) return null
       val out = new Array[Int](m)
       var j = 0
       while (j < m) {
         val off = j * subdim
-        var ss = 0.0; i = 0
+        var ss = 0.0; var i = 0
         while (i < subdim) {
           val x = v.getFloat(off + i).toDouble; ss += x * x; i += 1
         }
         var best = 0.0; var bestC = -1; var c = 0
         while (c < ksub) {
-          val cent = cArr(j * ksub + c)
+          val cent = cents(j * ksub + c)
           var ip = 0.0; i = 0
           while (i < subdim) {
             ip += v.getFloat(off + i).toDouble * cent(i).toDouble; i += 1
@@ -1028,54 +855,8 @@ object VectorExprs {
         }
         out(j) = bestC; j += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      new GenericArrayData(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cRef = ctx.addReferenceObj("pqCents", cArr, "float[][]")
-      val ccRef = ctx.addReferenceObj("pqCc", ccNorm, "double[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val out = ctx.freshName("out"); val j = ctx.freshName("j")
-        val i = ctx.freshName("i"); val c = ctx.freshName("c")
-        val off = ctx.freshName("off"); val ss = ctx.freshName("ss")
-        val ip = ctx.freshName("ip"); val d2 = ctx.freshName("d2")
-        val best = ctx.freshName("best"); val bestC = ctx.freshName("bestC")
-        val cent = ctx.freshName("cent")
-        val x = ctx.freshName("x")
-        s"""
-           |if ($a.numElements() != ${m * subdim}) { ${ev.isNull} = true; }
-           |for (int $i = 0; !${ev.isNull} && $i < ${m * subdim}; $i++) {
-           |  if ($a.isNullAt($i)) ${ev.isNull} = true;
-           |}
-           |if (!${ev.isNull}) {
-           |  int[] $out = new int[$m];
-           |  for (int $j = 0; $j < $m; $j++) {
-           |    int $off = $j * $subdim;
-           |    double $ss = 0.0;
-           |    for (int $i = 0; $i < $subdim; $i++) {
-           |      double $x = (double) $a.getFloat($off + $i); $ss += $x * $x;
-           |    }
-           |    double $best = 0.0; int $bestC = -1;
-           |    for (int $c = 0; $c < $ksub; $c++) {
-           |      float[] $cent = $cRef[$j * $ksub + $c];
-           |      double $ip = 0.0;
-           |      for (int $i = 0; $i < $subdim; $i++) {
-           |        $ip += (double) $a.getFloat($off + $i) * (double) $cent[$i];
-           |      }
-           |      double $d2 = $ss - 2.0 * $ip + $ccRef[$j * $ksub + $c];
-           |      if ($bestC < 0 || $d2 < $best) { $best = $d2; $bestC = $c; }
-           |    }
-           |    $out[$j] = $bestC;
-           |  }
-           |  ${ev.value} =
-           |    new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           |}
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** Per-query ADC lookup table against the same bound codebook:
@@ -1084,35 +865,37 @@ object VectorExprs {
     * carries to every encoded corpus row. Same null/length semantics as
     * [[PqEncode]]. */
   case class PqAdcTable(child: Expression, m: Int, ksub: Int,
-                        cents: Seq[Seq[Float]])
-      extends UnaryExpression with ExpectsInputTypes {
-    require(m > 0 && ksub > 0 && cents.length == m * ksub,
-      s"codebook must hold m*ksub=${m * ksub} centroids")
-    override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
+                        cents: Seq[Seq[Float]]) extends BoundCodebook {
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "graft_pq_adc_table"
 
-    override def toString: String =
-      s"graft_pq_adc_table($child, m=$m, ksub=$ksub, codebook=[bound])"
+    override def nullSafeEval(input: Any): Any =
+      PqAdcTable.table(input.asInstanceOf[ArrayData], cArr, m, ksub)
 
-    @transient private lazy val cArr: Array[Array[Float]] =
-      cents.map(_.toArray).toArray
-    @transient private lazy val subdim: Int = cArr(0).length
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cRef = ctx.addReferenceObj("pqCents", cArr, "float[][]")
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = ${module(PqAdcTable)}" +
+        s".table($a, $cRef, $m, $ksub); ${ev.isNull} = ${ev.value} == null;")
+    }
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      if (v.numElements() != m * subdim) return null
-      var i = 0
-      while (i < m * subdim) { if (v.isNullAt(i)) return null; i += 1 }
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object PqAdcTable {
+    /** The table of `v` against the j-major codebook `cents`, or null
+      * for a malformed vector. */
+    def table(v: ArrayData, cents: Array[Array[Float]], m: Int, ksub: Int): ArrayData = {
+      val subdim = cents(0).length
+      if (!wellFormed(v, m * subdim)) return null
       val out = new Array[Double](m * ksub)
       var j = 0
       while (j < m) {
         val off = j * subdim
         var c = 0
         while (c < ksub) {
-          val cent = cArr(j * ksub + c)
-          var ip = 0.0; i = 0
+          val cent = cents(j * ksub + c)
+          var ip = 0.0; var i = 0
           while (i < subdim) {
             ip += v.getFloat(off + i).toDouble * cent(i).toDouble; i += 1
           }
@@ -1120,43 +903,8 @@ object VectorExprs {
         }
         j += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      new GenericArrayData(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cRef = ctx.addReferenceObj("pqCents", cArr, "float[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val out = ctx.freshName("out"); val j = ctx.freshName("j")
-        val i = ctx.freshName("i"); val c = ctx.freshName("c")
-        val off = ctx.freshName("off"); val ip = ctx.freshName("ip")
-        val cent = ctx.freshName("cent")
-        s"""
-           |if ($a.numElements() != ${m * subdim}) { ${ev.isNull} = true; }
-           |for (int $i = 0; !${ev.isNull} && $i < ${m * subdim}; $i++) {
-           |  if ($a.isNullAt($i)) ${ev.isNull} = true;
-           |}
-           |if (!${ev.isNull}) {
-           |  double[] $out = new double[${m * ksub}];
-           |  for (int $j = 0; $j < $m; $j++) {
-           |    int $off = $j * $subdim;
-           |    for (int $c = 0; $c < $ksub; $c++) {
-           |      float[] $cent = $cRef[$j * $ksub + $c];
-           |      double $ip = 0.0;
-           |      for (int $i = 0; $i < $subdim; $i++) {
-           |        $ip += (double) $a.getFloat($off + $i) * (double) $cent[$i];
-           |      }
-           |      $out[$j * $ksub + $c] = $ip;
-           |    }
-           |  }
-           |  ${ev.value} =
-           |    new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           |}
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** Top-`keep` centroid cells of a float-vector column by cosine
@@ -1164,9 +912,9 @@ object VectorExprs {
     * expression (coarse quantizers are model state, nlist-sized). Output
     * is the cell ids ordered by (similarity desc, cell asc) — exactly the
     * `row_number over (sim desc, cell)` contract of the broadcast-join +
-    * window formulation it replaces, with [[CosineSim]]'s accumulation
+    * window formulation it replaces, scored by [[CosineSim]]'s own kernel
     * (Double, index order, min-length loop, no per-element null checks)
-    * reproduced bit-for-bit so assignments are unchanged. One tight loop
+    * so assignments are unchanged. One tight loop
     * per row; no join, no window, no shuffle in the assignment pass. */
   case class TopCellsByCosine(child: Expression,
                               cells: Seq[(Long, Seq[Float])], keep: Int)
@@ -1182,30 +930,37 @@ object VectorExprs {
     @transient private lazy val sortedCells = cells.sortBy(_._1)
     @transient private lazy val ids: Array[Long] =
       sortedCells.map(_._1).toArray
-    @transient private lazy val cArr: Array[Array[Float]] =
-      sortedCells.map(_._2.toArray).toArray
-    @transient private lazy val keepN = math.min(keep, cells.length)
+    @transient private lazy val cArr: Array[ArrayData] =
+      sortedCells.map(c => UnsafeArrayData.fromPrimitiveArray(c._2.toArray): ArrayData)
+        .toArray
+    private def keepN = math.min(keep, cells.length)
 
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val nc = cArr.length
+    override def nullSafeEval(input: Any): Any =
+      TopCellsByCosine.top(input.asInstanceOf[ArrayData], ids, cArr, keepN)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cRef = ctx.addReferenceObj("cellCents", cArr, s"${classOf[ArrayData].getName}[]")
+      val idRef = ctx.addReferenceObj("cellIds", ids, "long[]")
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = " +
+        s"${module(TopCellsByCosine)}.top($a, $idRef, $cRef, $keepN);")
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object TopCellsByCosine {
+    /** The `keep` best of cells `ids` (centroids `cents`, id-sorted). */
+    def top(v: ArrayData, ids: Array[Long], cents: Array[ArrayData],
+            keep: Int): ArrayData = {
+      val nc = cents.length
       val sims = new Array[Double](nc)
       var c = 0
-      while (c < nc) {
-        val cent = cArr(c)
-        val n = math.min(v.numElements(), cent.length)
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xv = v.getFloat(i).toDouble; val yv = cent(i).toDouble
-          dot += xv * yv; na += xv * xv; nb += yv * yv; i += 1
-        }
-        sims(c) = dot / (math.sqrt(na) * math.sqrt(nb))
-        c += 1
-      }
-      val out = new Array[Long](keepN)
+      while (c < nc) { sims(c) = CosineSim.cosine(v, cents(c)); c += 1 }
+      val out = new Array[Long](keep)
       val used = new Array[Boolean](nc)
       var r = 0
-      while (r < keepN) {
+      while (r < keep) {
         var best = -1; c = 0
         while (c < nc) {
           if (!used(c) && (best < 0 || sims(c) > sims(best))) best = c
@@ -1213,51 +968,8 @@ object VectorExprs {
         }
         used(best) = true; out(r) = ids(best); r += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      new GenericArrayData(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cRef = ctx.addReferenceObj("cellCents", cArr, "float[][]")
-      val idRef = ctx.addReferenceObj("cellIds", ids, "long[]")
-      val nc = cArr.length
-      nullSafeCodeGen(ctx, ev, a => {
-        val sims = ctx.freshName("sims"); val used = ctx.freshName("used")
-        val out = ctx.freshName("out"); val c = ctx.freshName("c")
-        val i = ctx.freshName("i"); val r = ctx.freshName("r")
-        val n = ctx.freshName("n"); val cent = ctx.freshName("cent")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-        val nb = ctx.freshName("nb"); val best = ctx.freshName("best")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |double[] $sims = new double[$nc];
-           |for (int $c = 0; $c < $nc; $c++) {
-           |  float[] $cent = $cRef[$c];
-           |  int $n = java.lang.Math.min($a.numElements(), $cent.length);
-           |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    double $xv = (double) $a.getFloat($i);
-           |    double $yv = (double) $cent[$i];
-           |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-           |  }
-           |  $sims[$c] = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-           |}
-           |long[] $out = new long[$keepN];
-           |boolean[] $used = new boolean[$nc];
-           |for (int $r = 0; $r < $keepN; $r++) {
-           |  int $best = -1;
-           |  for (int $c = 0; $c < $nc; $c++) {
-           |    if (!$used[$c] && ($best < 0 || $sims[$c] > $sims[$best])) $best = $c;
-           |  }
-           |  $used[$best] = true; $out[$r] = $idRef[$best];
-           |}
-           |${ev.value} =
-           |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** Block-pair outer products for the dimension covariance
@@ -1284,15 +996,24 @@ object VectorExprs {
       extends UnaryExpression with ExpectsInputTypes {
     require(b >= 1 && b <= 64, s"block size in [1, 64], got $b")
     override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-    private val xyType = ArrayType(LongType, containsNull = true)
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("bi", IntegerType, nullable = false),
       StructField("bj", IntegerType, nullable = false),
-      StructField("xy", xyType, nullable = false))), containsNull = false)
+      StructField("xy", ArrayType(LongType, containsNull = true), nullable = false))), containsNull = false)
     override def prettyName: String = "graft_cov_block_pairs"
 
-    override def nullSafeEval(input: Any): Any = compute(input)
+    override def nullSafeEval(input: Any): Any =
+      CovBlockPairs.pairs(input.asInstanceOf[ArrayData], b)
 
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = ${module(CovBlockPairs)}.pairs($a, $b);")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  object CovBlockPairs {
     // picounit product with the long range guarded (throws like the
     // DuckDB oracle's CAST instead of Scala toLong's silent saturation)
     @inline private def pico(x: Double, y: Double): Long = {
@@ -1305,8 +1026,7 @@ object VectorExprs {
       math.floor(p).toLong
     }
 
-    def compute(input: Any): org.apache.spark.sql.catalyst.util.ArrayData = {
-      val v = input.asInstanceOf[ArrayData]
+    def pairs(v: ArrayData, b: Int): ArrayData = {
       val d = v.numElements()
       val nb = (d + b - 1) / b
       // hoist the floats (and their null mask) out of the O(d²) loop
@@ -1353,33 +1073,21 @@ object VectorExprs {
                 }
                 pi += 1
               }
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
+              new GenericArrayData(a)
             }
-          out(k) = org.apache.spark.sql.catalyst.InternalRow(
-            bi, bj, xy)
+          out(k) = InternalRow(bi, bj, xy)
           k += 1; bj += 1
         }
         bi += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      new GenericArrayData(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // the grid loop lives in compute(); generated code calls it once
-      // per row, keeping the stage's codegen span unbroken without
-      // inlining a struct-building loop into Janino source
-      val ref = ctx.addReferenceObj("covBlockPairs", this,
-        classOf[CovBlockPairs].getName)
-      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
   }
 
   /** ADC score of one encoded corpus row against one query table:
     * Σ_j table[j·ksub + codes[j]], summed j-ascending from 0.0 — the
-    * same left fold as the `aggregate(zip_with(...))` HOF it replaces. */
+    * same left fold as the `aggregate(zip_with(...))` HOF it replaces.
+    * NULL when a code is NULL or points at a missing / NULL table slot. */
   case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
       extends BinaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[AbstractDataType] =
@@ -1389,105 +1097,99 @@ object VectorExprs {
     override def prettyName: String = "graft_pq_adc_score"
 
     override def nullSafeEval(a: Any, b: Any): Any = {
-      val codes = a.asInstanceOf[ArrayData]
-      val table = b.asInstanceOf[ArrayData]
-      var s = 0.0; var j = 0
-      while (j < codes.numElements()) {
-        if (codes.isNullAt(j)) return null
-        val idx = j * ksub + codes.getInt(j)
-        if (idx < 0 || idx >= table.numElements() || table.isNullAt(idx))
-          return null
-        s += table.getDouble(idx); j += 1
-      }
-      s
+      val codes = a.asInstanceOf[ArrayData]; val table = b.asInstanceOf[ArrayData]
+      if (PqAdcScore.isNull(codes, table, ksub)) null
+      else PqAdcScore.score(codes, table, ksub)
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val s = ctx.freshName("s"); val j = ctx.freshName("j")
-        val idx = ctx.freshName("idx")
-        s"""
-           |double $s = 0.0;
-           |for (int $j = 0; !${ev.isNull} && $j < $a.numElements(); $j++) {
-           |  if ($a.isNullAt($j)) { ${ev.isNull} = true; break; }
-           |  int $idx = $j * $ksub + $a.getInt($j);
-           |  if ($idx < 0 || $idx >= $b.numElements() || $b.isNullAt($idx)) {
-           |    ${ev.isNull} = true; break;
-           |  }
-           |  $s += $b.getDouble($idx);
-           |}
-           |if (!${ev.isNull}) ${ev.value} = $s;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.isNull} = ${module(PqAdcScore)}" +
+        s".isNull($a, $b, $ksub); if (!${ev.isNull}) ${ev.value} = " +
+        s"${module(PqAdcScore)}.score($a, $b, $ksub);")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
   }
 
+  object PqAdcScore {
+    def isNull(codes: ArrayData, table: ArrayData, ksub: Int): Boolean = {
+      var j = 0
+      while (j < codes.numElements()) {
+        if (codes.isNullAt(j)) return true
+        val idx = j * ksub + codes.getInt(j)
+        if (idx < 0 || idx >= table.numElements() || table.isNullAt(idx))
+          return true
+        j += 1
+      }
+      false
+    }
+
+    /** The sum, where [[isNull]] is false. */
+    def score(codes: ArrayData, table: ArrayData, ksub: Int): Double = {
+      var s = 0.0; var j = 0
+      while (j < codes.numElements()) {
+        s += table.getDouble(j * ksub + codes.getInt(j)); j += 1
+      }
+      s
+    }
+  }
+
   // ---- Column-level API ----
 
-  def floatDot(a: Column, b: Column): Column =
-    ExprBridge.column(FloatDot(ExprBridge.expression(a), ExprBridge.expression(b)))
+  private def c(e: Expression): Column = ExprBridge.column(e)
+  private def e(c: Column): Expression = ExprBridge.expression(c)
 
-  def simhash64(tokens: Column): Column =
-    ExprBridge.column(SimHash64(ExprBridge.expression(tokens)))
+  def floatDot(a: Column, b: Column): Column = c(FloatDot(e(a), e(b)))
+
+  def dotRound9(a: Column, b: Column): Column = c(DotRound9(e(a), e(b)))
+
+  def simhash64(tokens: Column): Column = c(SimHash64(e(tokens)))
 
   def minhashSig(shingles: Column, numHashes: Int): Column =
-    ExprBridge.column(MinHashSig(ExprBridge.expression(shingles), numHashes))
+    c(MinHashSig(e(shingles), numHashes))
 
-  def cosineSim(a: Column, b: Column): Column =
-    ExprBridge.column(CosineSim(ExprBridge.expression(a), ExprBridge.expression(b)))
+  def cosineSim(a: Column, b: Column): Column = c(CosineSim(e(a), e(b)))
 
   def shingleHash64(tokens: Column, n: Int): Column =
-    ExprBridge.column(ShingleHash64(ExprBridge.expression(tokens), n))
+    c(ShingleHash64(e(tokens), n))
 
   def minhashFromHashes(hashes: Column, numHashes: Int): Column =
-    ExprBridge.column(MinHashFromHashes(ExprBridge.expression(hashes), numHashes))
+    c(MinHashFromHashes(e(hashes), numHashes))
 
   def bandHashes64(sig: Column, bands: Int, r: Int): Column =
-    ExprBridge.column(BandHashes64(ExprBridge.expression(sig), bands, r))
+    c(BandHashes64(e(sig), bands, r))
 
   def lshSign64(vec: Column, numPlanes: Int): Column =
-    ExprBridge.column(LshSign64(ExprBridge.expression(vec), numPlanes))
+    c(LshSign64(e(vec), numPlanes))
 
   def shingleStrings(tokens: Column, n: Int): Column =
-    ExprBridge.column(ShingleStrings(ExprBridge.expression(tokens), n))
+    c(ShingleStrings(e(tokens), n))
 
-  def polyHash(text: Column): Column =
-    ExprBridge.column(PolyHash(ExprBridge.expression(text)))
+  def polyHash(text: Column): Column = c(PolyHash(e(text)))
 
-  def jaroWinkler(a: Column, b: Column): Column =
-    ExprBridge.column(
-      JaroWinkler(ExprBridge.expression(a), ExprBridge.expression(b)))
+  def jaroWinkler(a: Column, b: Column): Column = c(JaroWinkler(e(a), e(b)))
 
-  def byteEntropy(text: Column): Column =
-    ExprBridge.column(ByteEntropy(ExprBridge.expression(text)))
+  def byteEntropy(text: Column): Column = c(ByteEntropy(e(text)))
 
-  def interleave64(a: Column, b: Column): Column =
-    ExprBridge.column(
-      Interleave64(ExprBridge.expression(a), ExprBridge.expression(b)))
+  def interleave64(a: Column, b: Column): Column = c(Interleave64(e(a), e(b)))
 
   def hilbertD2(a: Column, b: Column, bits: Int): Column =
-    ExprBridge.column(
-      HilbertD2(ExprBridge.expression(a), ExprBridge.expression(b), bits))
+    c(HilbertD2(e(a), e(b), bits))
 
-  def pqEncode(vec: Column, m: Int, ksub: Int,
-               cents: Seq[Seq[Float]]): Column =
-    ExprBridge.column(PqEncode(ExprBridge.expression(vec), m, ksub, cents))
+  def pqEncode(vec: Column, m: Int, ksub: Int, cents: Seq[Seq[Float]]): Column =
+    c(PqEncode(e(vec), m, ksub, cents))
 
-  def pqAdcTable(vec: Column, m: Int, ksub: Int,
-                 cents: Seq[Seq[Float]]): Column =
-    ExprBridge.column(PqAdcTable(ExprBridge.expression(vec), m, ksub, cents))
+  def pqAdcTable(vec: Column, m: Int, ksub: Int, cents: Seq[Seq[Float]]): Column =
+    c(PqAdcTable(e(vec), m, ksub, cents))
 
   def pqAdcScore(codes: Column, table: Column, ksub: Int): Column =
-    ExprBridge.column(PqAdcScore(
-      ExprBridge.expression(codes), ExprBridge.expression(table), ksub))
+    c(PqAdcScore(e(codes), e(table), ksub))
 
   def covBlockPairs(vec: Column, blockSize: Int): Column =
-    ExprBridge.column(CovBlockPairs(ExprBridge.expression(vec), blockSize))
+    c(CovBlockPairs(e(vec), blockSize))
 
   def topCellsByCosine(vec: Column, cells: Seq[(Long, Seq[Float])],
                        keep: Int): Column =
-    ExprBridge.column(TopCellsByCosine(ExprBridge.expression(vec), cells, keep))
+    c(TopCellsByCosine(e(vec), cells, keep))
 }

@@ -7,12 +7,13 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, LocalFileSystem, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** `NioLocalFileSystem` leaves every written file and directory with the
-  * permissions Hadoop's stock local file system gives it. */
+/** `NioLocalFileSystem` and `NioLocalFs` leave every written file and
+  * directory with the permissions Hadoop's stock local file systems give
+  * it. */
 class LocalFsSpec extends SparkTestBase {
 
   private val Uuid =
@@ -62,6 +63,42 @@ class LocalFsSpec extends SparkTestBase {
         assert(nio.keySet === stock.keySet, impl.getName)
         assert(nio === stock, impl.getName)
       }
+    } finally FileUtil.fullyDelete(root.toFile)
+  }
+
+  test("a writeParquetStream run leaves the permissions the stock " +
+      "FileContext file system leaves") {
+    val key = "fs.AbstractFileSystem.file.impl"
+    val root = Files.createTempDirectory("graft-localfs-stream")
+    val in = root.resolve("in").toString
+    spark.range(0, 8, 1, 1).selectExpr("id", "id % 2 AS part")
+      .write.parquet(in)
+    val schema = spark.read.parquet(in).schema
+    // checkpoint and sink-log writes go through FileContext, which builds
+    // its file system per call from the session conf, so setting `key`
+    // picks the class for one query
+    def run(impl: String): Map[String, String] = {
+      val out = root.resolve(impl.split('.').last)
+      spark.conf.set(key, impl)
+      try {
+        assert(FileContext.getFileContext(out.toUri,
+          spark.sessionState.newHadoopConf())
+          .getDefaultFileSystem.getClass.getName === impl)
+        val q = graft.streaming.StreamOps.writeParquetStream(
+          spark.readStream.schema(schema).parquet(in),
+          s"$out/data", s"$out/ck", partitionBy = Seq("part"))
+        assert(q.awaitTermination(60000)); q.stop()
+      } finally spark.conf.unset(key)
+      tree(out)
+    }
+    try {
+      val nio = run(classOf[NioLocalFs].getName)
+      val stock = run("org.apache.hadoop.fs.local.LocalFs")
+      assert(stock.keySet.exists(_.startsWith("ck/offsets/")))
+      assert(stock.keySet.exists(_.startsWith("data/_spark_metadata/")))
+      assert(stock.keySet.exists(_.endsWith(".crc")))
+      assert(nio.keySet === stock.keySet)
+      assert(nio === stock)
     } finally FileUtil.fullyDelete(root.toFile)
   }
 

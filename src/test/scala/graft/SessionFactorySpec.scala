@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, LocalFileSystem, Path}
 
 class SessionFactorySpec extends SparkTestBase {
 
@@ -46,6 +46,17 @@ class SessionFactorySpec extends SparkTestBase {
       case Some(v) => s.conf.set(key, v)
       case None => s.conf.unset(key)
     }
+  }
+
+  test("session FileContext writes resolve the NIO local file system") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fc")
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      assert(conf.get("fs.AbstractFileSystem.file.impl") ===
+        classOf[NioLocalFs].getName)
+      val fc = FileContext.getFileContext(tmp.toUri, conf)
+      assert(fc.getDefaultFileSystem.getClass === classOf[NioLocalFs])
+    } finally java.nio.file.Files.delete(tmp)
   }
 
   test("Verify rejects a wrong argument count with its usage line") {

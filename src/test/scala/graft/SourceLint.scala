@@ -4,20 +4,21 @@ import org.scalatest.Assertions._
 
 /** The census behind the source lints (`CollectLintSpec`,
   * `SourceReadLintSpec`, `WindowLintSpec`, `FoldLintSpec`,
-  * `ResetLintSpec`, `CheckpointLintSpec`): count a needle per file under
-  * `src/main/scala/graft`, outside comment lines, and hold the counts
+  * `ResetLintSpec`, `CheckpointLintSpec`, `CodegenLintSpec`): count a
+  * needle per file under a source root (`src/main/scala/graft` unless
+  * the spec names another), outside comment lines, and hold the counts
   * against the spec's registry of audited sites. Counts are per file, so
   * moving a site within a file never trips a lint, while adding one
   * always does. Must run from the repo root.
   */
 object SourceLint {
 
-  /** Per-file needle counts (files with no hit omitted). Line comments
-    * and scaladoc lines are skipped, so prose that names the pattern
-    * never counts; so is any line `skipLine` accepts. */
-  private def counts(needle: String,
-                     skipLine: String => Boolean): Map[String, Int] = {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
+  /** Per-file needle counts under `dir` (files with no hit omitted).
+    * Line comments and scaladoc lines are skipped, so prose that names
+    * the pattern never counts; so is any line `skipLine` accepts. */
+  private def counts(needle: String, skipLine: String => Boolean,
+                     dir: String): Map[String, Int] = {
+    val root = java.nio.file.Paths.get(dir)
     assert(java.nio.file.Files.isDirectory(root),
       s"lint must run from the repo root, cwd=${System.getProperty("user.dir")}")
     val walk = java.nio.file.Files.walk(root)
@@ -48,8 +49,9 @@ object SourceLint {
     * each site is safe). */
   def check(needle: String, registry: Map[String, (Int, String)],
             unaudited: String, advice: String,
-            skipLine: String => Boolean = _ => false): Unit = {
-    val found = counts(needle, skipLine)
+            skipLine: String => Boolean = _ => false,
+            dir: String = "src/main/scala/graft"): Unit = {
+    val found = counts(needle, skipLine, dir)
     val unregistered = found.filter { case (f, n) =>
       registry.get(f).forall(_._1 < n)
     }

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExprs
 
-/** Native Catalyst expressions: correctness of both the interpreted eval
-  * path and (via the default codegen execution) the doGenCode path, plus
+/** Native Catalyst expressions: kernel results, parity of the
+  * interpreted and generated paths that call each kernel, and
   * cross-checks against the portable higher-order-function formulations. */
 class VectorExprsSpec extends SparkTestBase {
   import spark.implicits._
@@ -154,44 +156,86 @@ class VectorExprsSpec extends SparkTestBase {
   }
 
   test("interpreted eval path agrees with codegen for every expression") {
-    // nullSafeEval and doGenCode are independent implementations; force
-    // the interpreted factory and compare against the (default) codegen
-    // results for the full expression set.
-    val toksDf = Seq(
-      (1L, "alpha beta gamma delta epsilon", Array(1.0f, -2.0f, 3.5f),
-        Array(0.5f, 0.25f, -1.0f))
-    ).toDF("id", "text", "va", "vb")
-    def results(): Seq[Seq[String]] = rendered(toksDf.select(
+    // nullSafeEval and the generated code call the same kernel; this pins
+    // that both paths wire it identically (scratch buffers, bound model
+    // state, the NULL rule), on well-formed and degenerate rows. The
+    // input is shuffled so the projection runs in a generated stage
+    // instead of being folded into the local relation (which evaluates
+    // it interpreted), and codegen fallback is off so generated code
+    // that fails to compile fails the test.
+    val f = Option(_: Float)
+    val rows = Seq[(Long, String, Seq[String], Seq[Option[Float]],
+        Seq[Option[Float]], Seq[Int], Seq[(Long, Double)])](
+      (1L, "alpha beta gamma delta epsilon",
+        Seq("alpha", "beta", "gamma", "delta", "epsilon"),
+        Seq(f(1.0f), f(-2.0f), f(3.5f)), Seq(f(0.5f), f(0.25f), f(-1.0f)),
+        Seq(2), Seq((1L, 0.123456789), (5L, 0.5000000005), (9L, 0.25))),
+      // ragged float arrays (also a PQ vector of the wrong length), a
+      // NULL token, a PQ code out of range
+      (2L, "ab", Seq("a", null, "b", "c"),
+        Seq(f(1.0f), f(2.0f)), Seq(f(10.0f), f(10.0f), f(9.0f)),
+        Seq(7), Seq((1L, 0.987654321), (9L, 0.999999999))),
+      // a NULL float element
+      (3L, "aabb", Seq("only"),
+        Seq(f(1.0f), None, f(2.0f)), Seq(f(0.5f), f(0.5f), f(0.5f)),
+        Seq(-1), Seq((2L, 0.111111111))),
+      // empty string, empty token array, empty arrays
+      (4L, "", Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty),
+      (5L, "aaaa", Seq("x", "y"), Seq(f(0f), f(0f), f(1f)),
+        Seq(f(0f), f(1f), f(0f)), Seq(0), Seq((5L, 0.3))),
+      (6L, "abcd", Seq("p", "q", "r"), Seq(f(-1f), f(1f), f(0f)),
+        Seq(f(2f), f(2f), f(2f)), Seq(3), Seq((1L, 0.5), (5L, 0.5))))
+    val df = rows.toDF("id", "text", "toks", "va", "vb", "codes", "raw")
+      .repartition(1)
+      .withColumn("tv", expr("transform(raw, x -> struct(x._1 as tid, x._2 as w))"))
+    val cents = Seq(Seq(0.5f, 0.25f, -1.0f), Seq(1f, -2f, 3.5f),
+      Seq(0f, 0f, 1f), Seq(-1f, 1f, 0f))
+    val toks = col("toks")
+    val exprs = Seq(
       VectorExprs.floatDot(col("va"), col("vb")),
       VectorExprs.cosineSim(col("va"), col("vb")),
-      VectorExprs.simhash64(split(col("text"), " ")),
-      VectorExprs.minhashSig(split(col("text"), " "), 8),
-      VectorExprs.shingleHash64(split(col("text"), " "), 3),
-      VectorExprs.minhashFromHashes(
-        VectorExprs.shingleHash64(split(col("text"), " "), 3), 8),
-      VectorExprs.bandHashes64(
-        VectorExprs.minhashSig(split(col("text"), " "), 8), 4, 2),
+      VectorExprs.dotRound9(col("tv"), col("tv")),
+      VectorExprs.dotRound9(col("tv"), reverse(col("tv"))),
+      VectorExprs.simhash64(toks),
+      VectorExprs.minhashSig(toks, 8),
+      VectorExprs.shingleHash64(toks, 3),
+      VectorExprs.minhashFromHashes(VectorExprs.shingleHash64(toks, 3), 8),
+      VectorExprs.bandHashes64(VectorExprs.minhashSig(toks, 8), 4, 2),
       VectorExprs.lshSign64(col("va"), 16),
-      VectorExprs.shingleStrings(split(col("text"), " "), 3),
+      VectorExprs.shingleStrings(toks, 2),
       VectorExprs.polyHash(col("text")),
       VectorExprs.jaroWinkler(col("text"), reverse(col("text"))),
+      VectorExprs.byteEntropy(col("text")),
       VectorExprs.interleave64(col("id") * 12345L, col("id") * 67L),
-      VectorExprs.hilbertD2(col("id") * 173L, col("id") * 41L, 8), {
-        val cents = Seq(Seq(0.5f, 0.25f, -1.0f), Seq(1f, -2f, 3.5f),
-          Seq(0f, 0f, 1f), Seq(-1f, 1f, 0f))
-        VectorExprs.pqAdcScore(
-          VectorExprs.pqEncode(col("va"), 1, 4, cents),
-          VectorExprs.pqAdcTable(col("va"), 1, 4, cents), 4)
-      },
+      VectorExprs.hilbertD2(col("id") * 173L, col("id") * 41L, 8),
+      VectorExprs.pqEncode(col("va"), 1, 4, cents),
+      VectorExprs.pqAdcTable(col("va"), 1, 4, cents),
+      VectorExprs.pqAdcScore(VectorExprs.pqEncode(col("va"), 1, 4, cents),
+        VectorExprs.pqAdcTable(col("va"), 1, 4, cents), 4),
+      VectorExprs.pqAdcScore(col("codes"),
+        VectorExprs.pqAdcTable(col("vb"), 1, 4, cents), 4),
       VectorExprs.topCellsByCosine(col("va"),
         Seq((1L, Seq(0.5f, 0.25f, -1.0f)), (2L, Seq(1f, -2f, 3.5f)),
-          (3L, Seq(0.5f, 0.25f, -1.0f))), 3)))
-    val viaCodegen = results()
+          (3L, Seq(0.5f, 0.25f, -1.0f))), 3),
+      VectorExprs.covBlockPairs(col("va"), 2))
+    val viaCodegen = {
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try {
+        val out = df.select(col("id") +: exprs: _*)
+        val result = rendered(out)
+        val stages = new AdaptiveSparkPlanHelper {}.collect(
+          out.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }
+        assert(stages.exists(_.child.isInstanceOf[ProjectExec]),
+          "the projection runs in a generated stage")
+        result
+      } finally spark.conf.unset("spark.sql.codegen.fallback")
+    }
+    assert(viaCodegen.size === rows.size)
     val prevWs = spark.conf.get("spark.sql.codegen.wholeStage")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
-      val viaInterp = results()
+      val viaInterp = rendered(df.select(col("id") +: exprs: _*))
       assert(viaInterp === viaCodegen)
     } finally {
       spark.conf.set("spark.sql.codegen.wholeStage", prevWs)
@@ -285,7 +329,7 @@ class VectorExprsSpec extends SparkTestBase {
     assert(bad === 1L)
   }
 
-  test("byteEntropy: closed-form values, empty → 0, codegen parity") {
+  test("byteEntropy: closed-form values, empty → 0") {
     val df = Seq(
       (1L, "aaaa"),           // one symbol → H = 0
       (2L, "ab"),             // two equiprobable → H = ln 2
@@ -293,23 +337,14 @@ class VectorExprsSpec extends SparkTestBase {
       (4L, ""),               // empty → 0.0 by convention
       (5L, "abcd")            // four equiprobable → ln 4
     ).toDF("id", "text")
-    def ents(): Map[Long, Double] =
-      df.select(col("id"), VectorExprs.byteEntropy(col("text")).as("h"))
-        .as[(Long, Double)].collect().toMap
-    val viaCodegen = ents()
-    assert(viaCodegen(1L) === 0.0)
-    assert(math.abs(viaCodegen(2L) - math.log(2)) < 1e-8)
-    assert(math.abs(viaCodegen(2L) - viaCodegen(3L)) <= 2e-9,
+    val h = df.select(col("id"), VectorExprs.byteEntropy(col("text")).as("h"))
+      .as[(Long, Double)].collect().toMap
+    assert(h(1L) === 0.0)
+    assert(math.abs(h(2L) - math.log(2)) < 1e-8)
+    assert(math.abs(h(2L) - h(3L)) <= 2e-9,
       "entropy depends on proportions, not counts (up to nanonat rounding)")
-    assert(viaCodegen(4L) === 0.0)
-    assert(math.abs(viaCodegen(5L) - math.log(4)) < 1e-8)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(ents() === viaCodegen, "interpreted path bit-equals codegen")
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    assert(h(4L) === 0.0)
+    assert(math.abs(h(5L) - math.log(4)) < 1e-8)
   }
 
   test("topCellsByCosine: (sim desc, cell asc) order, keep clamped to cells") {
